@@ -54,6 +54,13 @@ object Pipeline {
     )
   }
 
+  /** Rows one country's run wrote to the Bronze, clean and quarantine sinks,
+    * read from the metrics observed on the writes themselves (no extra job).
+    */
+  final case class CountryCounts(bronze: Long, clean: Long, quarantine: Long) {
+    override def toString: String = s"bronze=$bronze clean=$clean quarantine=$quarantine"
+  }
+
   /** Run every unprocessed country; returns countries successfully processed.
     *
     * Run-level events go to a per-run timestamped log file ([[RunLog]],
@@ -97,10 +104,10 @@ object Pipeline {
             if (p.process) rinfo(s"skip ${p.country}: already processed")
             else {
               try {
-                runCountry(spark, cfg, p, auditTs)
+                val counts = runCountry(spark, cfg, p, auditTs)
                 cfg = EtlConfig.markProcessed(configPath, cfg, p.country)
                 done += p.country
-                rinfo(s"country ${p.country} done [${p.startDate}..${p.endDate}]")
+                rinfo(s"country ${p.country} done [${p.startDate}..${p.endDate}] $counts")
               } catch {
                 case e: Exception =>
                   // stage error isolation: log and continue with the next
@@ -123,6 +130,7 @@ object Pipeline {
     * from under this country's in-flight scan (only a hazard when the
     * manifest went stale and the read fell back to a full listing).
     * Sequential runs keep `eager = false` — same job count as always.
+    * Returns the rows written per sink.
     */
   def runCountry(
       spark: SparkSession,
@@ -130,7 +138,7 @@ object Pipeline {
       p: CountryParam,
       auditTs: Column = current_timestamp(),
       eager: Boolean = false
-  ): Unit = {
+  ): CountryCounts = {
     val paths = Paths.under(cfg.outputRoot)
 
     // EP1 — Bronze: CSV → typed → slice → partition-aligned replaceWhere.
@@ -141,8 +149,8 @@ object Pipeline {
     // EP2's pruned re-read happens under the same lock: the plan must see
     // the file set this write commits, not a concurrent country's
     // mid-commit state
-    val enriched = lockFor(paths.bronze).synchronized {
-      Writer.replaceCountryRangePartitioned(
+    val (bronzeRows, enriched) = lockFor(paths.bronze).synchronized {
+      val rows = Writer.replaceCountryRangePartitioned(
         bronze, paths.bronze,
         dateCol = "fecha_proceso", countryCol = "pais",
         country = p.country, startDate = p.startDate, endDate = p.endDate,
@@ -178,11 +186,11 @@ object Pipeline {
         try { e.count(); () }
         catch { case t: Throwable => e.unpersist(); throw t }
       }
-      e
+      (rows, e)
     }
     try {
       val clean = Silver.clean(enriched)
-      lockFor(paths.silverClean).synchronized {
+      val cleanRows = lockFor(paths.silverClean).synchronized {
         Writer.replaceCountryRangePartitioned(
           clean, paths.silverClean,
           dateCol = "fec_proceso", countryCol = "cod_pais",
@@ -206,7 +214,7 @@ object Pipeline {
       // (read-keep-union-REWRITE is the one genuinely non-concurrent sink
       // shape: the lock is load-bearing here, not just index hygiene.)
       val quarantine = Silver.quarantine(enriched)
-      lockFor(paths.silverQuarantine).synchronized {
+      val quarantineRows = lockFor(paths.silverQuarantine).synchronized {
         Writer.replaceCountryRange(
           spark, quarantine, paths.silverQuarantine,
           partitionCol = "fec_proceso", countryCol = "cod_pais",
@@ -214,6 +222,7 @@ object Pipeline {
           dateAsString = true
         )
       }
+      CountryCounts(bronzeRows, cleanRows, quarantineRows)
     } finally enriched.unpersist()
   }
 
@@ -285,12 +294,12 @@ object Pipeline {
                 override def run(): Unit = {
                   try {
                     beforeCountry(p)
-                    runCountry(spark, cfg0, p, auditTs, eager = true)
+                    val counts = runCountry(spark, cfg0, p, auditTs, eager = true)
                     configLock.synchronized {
                       cfg = EtlConfig.markProcessed(configPath, cfg, p.country)
                     }
                     ok.add(p.country)
-                    rinfo(s"country ${p.country} done [${p.startDate}..${p.endDate}]")
+                    rinfo(s"country ${p.country} done [${p.startDate}..${p.endDate}] $counts")
                   } catch {
                     case e: Exception =>
                       rerror(s"country ${p.country} failed: ${e.getMessage}", e)

@@ -155,25 +155,23 @@ object Skipping {
   }
 
   /** The distributed footer sweep shared by [[writeManifest]] (all files)
-    * and [[updateManifest]] (only new files): one Spark job over the
-    * given file list — at 100k files of a 100 TB table the driver never
-    * reads a footer itself.
+    * and [[updateManifest]] (only new files): one single-stage Spark job
+    * over the given file list, split into at most 32 tasks — at 100k files
+    * of a 100 TB table the driver never reads a footer itself.
     */
   private def harvestJsons(spark: SparkSession, fs: FileSystem,
                            rootPath: HPath, files: Seq[(String, Long)],
                            wanted: Set[String]): Seq[String] = {
     if (files.isEmpty) return Seq.empty
     val qualifiedRoot = fs.makeQualified(rootPath).toString
-    import spark.implicits._
     // ship the DRIVER's hadoop conf to the footer tasks (a fresh
     // Configuration() on the executor would drop credentials/endpoints for
     // non-local stores — harmless on file://, wrong on s3a://hdfs://)
     val confBc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
-    spark
-      .createDataset(files.map { case (rel, size) => (rel, size) })
-      .repartition(math.min(files.size, 32))
+    spark.sparkContext
+      .parallelize(files, math.min(files.size, 32))
       .mapPartitions { it =>
         val conf = confBc.value.value
         it.map { case (rel, size) =>

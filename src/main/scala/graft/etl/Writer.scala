@@ -2,7 +2,8 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
 
 /** Predicate-scoped idempotent overwrite ("replaceWhere" emulation).
@@ -106,6 +107,7 @@ object Writer {
     *
     * The kept set is read with the *existing* table's schema; the caller must
     * ensure `df` is union-compatible (the pipeline always is — fixed DDL).
+    * Returns the number of rows `df` contributed, observed on the write.
     */
   def replaceWhere(
       spark: SparkSession,
@@ -114,7 +116,9 @@ object Writer {
       partitionCols: Seq[String],
       predicate: Column,
       statsColumns: Seq[String] = Nil
-  ): Unit = {
+  ): Long = {
+    val obs = Observation()
+    val slice = df.observe(obs, count(lit(1)).as("rows"))
     val target = new HPath(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new HPath(path + ".old")
@@ -123,10 +127,10 @@ object Writer {
     // than silently rebuilding the table from this run's slice alone.
     if (!fs.exists(target) && fs.exists(old)) fs.rename(old, target)
     if (!fs.exists(target)) {
-      overwritePartitions(df, path, partitionCols)
+      overwritePartitions(slice, path, partitionCols)
       if (statsColumns.nonEmpty) Skipping.updateManifest(spark, path, statsColumns)
       refreshBloomIfPresent(spark, path)
-      return
+      return observed(obs, path)("rows").asInstanceOf[Long]
     }
     // the swap below replaces the WHOLE directory, taking any bloom index
     // with it — snapshot its column set now so it can be rebuilt after
@@ -137,11 +141,12 @@ object Writer {
     // NULL-safe keep: rows where the predicate is NULL are kept too (Delta
     // replaceWhere deletes only rows where the predicate evaluates to true).
     val kept = existing.filter(!coalesce(predicate, lit(false)))
-    val merged = kept.unionByName(df.select(existing.columns.map(col).toIndexedSeq: _*))
+    val merged = kept.unionByName(slice.select(existing.columns.map(col).toIndexedSeq: _*))
 
     val tmp = new HPath(path + ".inprogress")
     fs.delete(tmp, true)
     merged.write.partitionBy(partitionCols: _*).mode("overwrite").parquet(tmp.toString)
+    val rows = observed(obs, path)("rows").asInstanceOf[Long]
     // swap: move old out, new in, drop old — last-moment non-atomicity is the
     // price of no transaction log (recovered on the next run, see above);
     // single-writer assumption documented above.
@@ -157,7 +162,7 @@ object Writer {
       BloomSkipping.updateBloomIndex(spark, path, cols)
       ()
     }
-    ()
+    rows
   }
 
   /** The pipeline's standard sink: country+date-range predicate, partitioned by
@@ -166,7 +171,8 @@ object Writer {
     * fast path applies only when the caller guarantees one country per run
     * shares no partition with another. The reference's semantics replace
     * (country ∧ range), so we use the general path whenever the target exists
-    * and may hold other countries' rows for the same dates.
+    * and may hold other countries' rows for the same dates. Returns the
+    * number of rows `df` contributed.
     */
   def replaceCountryRange(
       spark: SparkSession,
@@ -178,7 +184,7 @@ object Writer {
       startDate: String,
       endDate: String,
       dateAsString: Boolean = false
-  ): Unit = {
+  ): Long = {
     // Quarantine stores fec_proceso as STRING; its replaceWhere compares
     // lexicographically — correct only because ISO yyyy-MM-dd sorts like dates
     // (`ETL_Entregas_Base.ipynb:675`; SURVEY EP2.4). Preserve carefully.
@@ -211,9 +217,9 @@ object Writer {
     *     are deleted by directory listing — cost ∝ partition count, not data.
     *
     * Compared with [[replaceWhere]]'s read-keep-union-rewrite (cost ∝ table
-    * size), this touches only the affected slice. Requires
-    * `spark.sql.sources.partitionOverwriteMode=dynamic` (set in
-    * [[Schemas.session]]).
+    * size), this touches only the affected slice. The data write is the only
+    * Spark action: the written date set and row count ride it as observed
+    * metrics. Returns the number of rows written.
     */
   def replaceCountryRangePartitioned(
       df: DataFrame,
@@ -224,42 +230,49 @@ object Writer {
       startDate: String,
       endDate: String,
       statsColumns: Seq[String] = Nil
-  ): Unit = {
+  ): Long = {
     // enforce the declared contract: rows outside (country ∧ range) must not
     // ride along — dynamic overwrite would replace THEIR partitions too, and
     // the stale-partition cleanup could not account for them.
     val bounded = df.filter(
       col(countryCol) === country &&
         col(dateCol).cast("string") >= startDate && col(dateCol).cast("string") <= endDate)
-    // two actions read the frame (distinct dates + the write): persist so the
-    // upstream (e.g. the raw CSV parse) is computed once, not twice.
-    bounded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // distinct partition values in the incoming slice (bounded by the range
-      // length × 1 country — tiny)
-      val newDates: Set[String] =
-        bounded.select(col(dateCol).cast("string")).distinct().collect().map(_.getString(0)).toSet
+    val obs = Observation()
+    // cluster by the partition columns before writing: without this every
+    // task writes a sliver into every partition directory (tasks × dates
+    // small files — the classic small-file explosion); with it each
+    // partition gets one well-sized file. AQE rebalances if a date is huge.
+    // partitionOverwriteMode pinned per-write: STATIC would wipe the table.
+    bounded.repartition(col(dateCol), col(countryCol))
+      .observe(obs, collect_set(col(dateCol).cast("string")).as("dates"),
+        count(lit(1)).as("rows"))
+      .write
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(dateCol, countryCol).mode("overwrite").parquet(path)
+    val m = observed(obs, path)
+    cleanupStale(bounded.sparkSession, path, dateCol, countryCol, country,
+      startDate, endDate, m("dates").asInstanceOf[Seq[String]].toSet)
+    // skipping manifest, refreshed INCREMENTALLY: only the files this
+    // write produced get their footers harvested; every untouched
+    // partition's entries carry forward (cost ∝ slice, matching the
+    // write itself — a full per-write re-harvest would reintroduce the
+    // O(all files) sweep this fast path exists to avoid)
+    if (statsColumns.nonEmpty)
+      Skipping.updateManifest(bounded.sparkSession, path, statsColumns)
+    refreshBloomIfPresent(bounded.sparkSession, path)
+    m("rows").asInstanceOf[Long]
+  }
 
-      // cluster by the partition columns before writing: without this every
-      // task writes a sliver into every partition directory (tasks × dates
-      // small files — the classic small-file explosion); with it each
-      // partition gets one well-sized file. AQE rebalances if a date is huge.
-      // partitionOverwriteMode pinned per-write: STATIC would wipe the table.
-      bounded.repartition(col(dateCol), col(countryCol))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(dateCol, countryCol).mode("overwrite").parquet(path)
-      cleanupStale(bounded.sparkSession, path, dateCol, countryCol, country,
-        startDate, endDate, newDates)
-      // skipping manifest, refreshed INCREMENTALLY: only the files this
-      // write produced get their footers harvested; every untouched
-      // partition's entries carry forward (cost ∝ slice, matching the
-      // write itself — a full per-write re-harvest would reintroduce the
-      // O(all files) sweep this fast path exists to avoid)
-      if (statsColumns.nonEmpty)
-        Skipping.updateManifest(bounded.sparkSession, path, statsColumns)
-      refreshBloomIfPresent(bounded.sparkSession, path)
-    } finally { bounded.unpersist(); () }
+  /** The metrics observed on a finished write. Blocks until Spark delivers
+    * them; a write whose metrics are missing fails here rather than reading
+    * as "nothing written" (for the partitioned writer that would delete the
+    * slice it just wrote as stale).
+    */
+  private def observed(obs: Observation, path: String): Map[String, Any] = {
+    val m = obs.get
+    if (!m.contains("rows"))
+      throw new IllegalStateException(s"write to $path finished without its observed metrics")
+    m
   }
 
   // ---------------------------------------------------------------------
@@ -498,7 +511,8 @@ object Writer {
         if (st.isDirectory && name.startsWith(s"$dateCol=")) {
           val dateVal = name.substring(dateCol.length + 1)
           if (dateVal >= startDate && dateVal <= endDate && !newDates.contains(dateVal)) {
-            fs.delete(new HPath(st.getPath, s"$countryCol=$country"), true)
+            // the directory name carries the value as Spark escaped it
+            fs.delete(new HPath(st.getPath, s"$countryCol=${escapePathName(country)}"), true)
             // remove the date dir too if now empty
             if (fs.exists(st.getPath) && fs.listStatus(st.getPath).isEmpty)
               fs.delete(st.getPath, true)

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.etl.{Skipping, Writer}
 import graft.ops.{Dedup, Graph, RoundTrace}
 
 /** Pins the ONE-ACTION-PER-ROUND contract of the observe-fused iterative
@@ -27,23 +28,36 @@ import graft.ops.{Dedup, Graph, RoundTrace}
   * are identical for both, so
   *   executions(B) − executions(A) == rounds(B) − rounds(A)
   * holds iff the marginal round costs exactly one action.
+  *
+  * The same grain pins the ETL sink write: its date set and row count ride
+  * the data write as observed metrics, and the footer harvest behind the
+  * skipping manifest is a single-stage job.
   */
 class JobCountSpec extends SparkTestBase {
 
-  private def countExecutions(body: => Unit): Int = {
+  /** (SQL executions, scheduler jobs, submitted stages) run by `body`. */
+  private def countActions(body: => Unit): (Int, Int, Int) = {
     val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
         Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.root.id")))
           .foreach { id => ids.add(id); () }
+      }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
       }
     }
     spark.sparkContext.addSparkListener(l)
     try { body; org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
-    ids.size()
+    (ids.size(), jobs.get, stages.get)
   }
+
+  private def countExecutions(body: => Unit): Int = countActions(body)._1
 
   private def pathGraph(n: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -99,5 +113,36 @@ class JobCountSpec extends SparkTestBase {
       Graph.shortestPathsInt(w, Seq(0L).toDF("node"), maxRounds = 32).count()
       ()
     }
+  }
+
+  test("replaceCountryRangePartitioned: the data write is the only SQL execution") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jc").toString + "/t"
+    val df = spark.range(0, 60).select(
+      lit("EC").as("pais"),
+      date_add(to_date(lit("2025-01-01")), (col("id") % 3).cast("int")).as("fecha_proceso"),
+      col("id").cast("decimal(21,2)").as("precio"))
+    def write(slice: DataFrame): Long =
+      Writer.replaceCountryRangePartitioned(slice, dir, "fecha_proceso", "pais", "EC",
+        "2025-01-01", "2025-01-31", statsColumns = Seq("precio"))
+    write(df)
+    // the measured rerun drops one date, so the stale cleanup and the
+    // manifest refresh both have work to do
+    var rows = 0L
+    val execs = countExecutions { rows = write(df.filter(col("id") % 3 =!= 2)) }
+    assert(rows == 40)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "fecha_proceso=2025-01-03")))
+    assert(execs == 1, s"the write must be the only SQL execution, got $execs")
+  }
+
+  test("Skipping.updateManifest: k fresh footers are harvested by one single-stage job") {
+    val root = java.nio.file.Files.createTempDirectory("graft-jc").toString + "/m"
+    spark.range(0, 40).repartition(4).write.parquet(root)
+    Skipping.writeManifest(spark, root, Seq("id"))
+    spark.range(100, 130).repartition(3).write.mode("append").parquet(root)
+    var harvested = 0
+    val (_, jobs, stages) = countActions { harvested = Skipping.updateManifest(spark, root, Seq("id")) }
+    assert(harvested == 3)
+    assert(jobs == 1 && stages == 1,
+      s"footer harvest must be one job with one stage: $jobs jobs, $stages stages")
   }
 }

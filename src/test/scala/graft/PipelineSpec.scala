@@ -104,6 +104,16 @@ class PipelineSpec extends SparkTestBase {
     assert(clean.filter(col("cod_pais") === "EC").count() == 5)
     assert(clean.filter(col("cod_pais") === "PE").count() == 1)
     assert(obs.count() == 8)
+
+    // the run log carries each country's per-sink row counts, observed on
+    // the writes themselves; they must match what the sinks hold
+    val bronze = spark.read.parquet(paths.bronze)
+    for (c <- Seq("EC", "PE")) {
+      val counts = s"bronze=${bronze.filter(col("pais") === c).count()} " +
+        s"clean=${clean.filter(col("cod_pais") === c).count()} " +
+        s"quarantine=${obs.filter(col("cod_pais") === c).count()}"
+      assert(logText.contains(s"country $c done [2025-01-01..2025-06-30] $counts"), logText)
+    }
     assert(
       obs.filter(col("cod_material") === "M15").collect().head
         .getAs[String]("motivo_obs") == "ERR_TIPO_ENTREGA_NO_CONSIDERADA")

@@ -233,9 +233,9 @@ class SkippingSpec extends SparkTestBase {
     assert(Skipping.readPrunedDetailed(spark, root, "k <= 20")
       .fallback.exists(_.contains("stale")))
     // the incremental refresh: exactly ONE footer harvested, and the
-    // Spark work done is the one-file job, not an 9-file re-sweep —
-    // counted at the task grain (a full rewrite schedules >=10 tasks:
-    // 1 local-scan + 9 post-repartition harvest tasks)
+    // Spark work done is the one-file job, not a 9-file re-sweep —
+    // counted at the task grain (a full rewrite schedules 9 harvest
+    // tasks, one per file)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(

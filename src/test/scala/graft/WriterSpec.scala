@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -41,6 +41,53 @@ class WriterSpec extends SparkTestBase {
       mk(Seq(("EC", "2025-02-10", 7.0))),
       dir, "fecha_proceso", "pais", "EC", "2025-02-01", "2025-02-28")
     assert(spark.read.parquet(dir).count() == 3)
+  }
+
+  test("partition-aligned replaceWhere: stale cleanup matches escaped country directories") {
+    val dir = Files.createTempDirectory("graft-w").toString + "/t"
+    Writer.replaceCountryRangePartitioned(
+      mk(Seq(("E:C", "2025-01-01", 1.0), ("E:C", "2025-01-02", 2.0))),
+      dir, "fecha_proceso", "pais", "E:C", "2025-01-01", "2025-01-31")
+    Writer.replaceCountryRangePartitioned(
+      mk(Seq(("PE", "2025-01-02", 9.0))),
+      dir, "fecha_proceso", "pais", "PE", "2025-01-01", "2025-01-31")
+    // Spark stores the value escaped: ':' becomes %3A in the directory name
+    val stale = Paths.get(dir, "fecha_proceso=2025-01-02", "pais=E%3AC")
+    assert(Files.isDirectory(stale))
+
+    Writer.replaceCountryRangePartitioned(
+      mk(Seq(("E:C", "2025-01-01", 5.0))),
+      dir, "fecha_proceso", "pais", "E:C", "2025-01-01", "2025-01-31")
+    assert(!Files.exists(stale), "the stale escaped partition must be deleted")
+    val back = spark.read.parquet(dir)
+    assert(back.filter(col("pais") === "E:C").collect().map(_.getAs[Double]("v")).toSeq == Seq(5.0))
+    assert(back.filter(col("pais") === "PE").count() == 1)
+  }
+
+  test("partition-aligned replaceWhere: a rerun with no in-range rows clears only that slice") {
+    val dir = Files.createTempDirectory("graft-w").toString + "/t"
+    assert(Writer.replaceCountryRangePartitioned(
+      mk(Seq(("EC", "2025-01-01", 1.0), ("EC", "2025-01-02", 2.0))),
+      dir, "fecha_proceso", "pais", "EC", "2025-01-01", "2025-01-31") == 2)
+    Writer.replaceCountryRangePartitioned(
+      mk(Seq(("PE", "2025-01-02", 9.0))),
+      dir, "fecha_proceso", "pais", "PE", "2025-01-01", "2025-01-31")
+    Writer.replaceCountryRangePartitioned(
+      mk(Seq(("EC", "2025-02-10", 7.0))),
+      dir, "fecha_proceso", "pais", "EC", "2025-02-01", "2025-02-28")
+
+    // the source still holds rows, none of them EC within January: the
+    // write is empty, its observation must still resolve, and every EC
+    // January partition is stale
+    val written = Writer.replaceCountryRangePartitioned(
+      mk(Seq(("PE", "2025-01-05", 3.0), ("EC", "2025-03-01", 4.0))),
+      dir, "fecha_proceso", "pais", "EC", "2025-01-01", "2025-01-31")
+    assert(written == 0)
+    val back = spark.read.parquet(dir)
+    assert(back.filter(col("pais") === "EC").collect().map(_.getAs[Double]("v")).toSeq == Seq(7.0))
+    assert(back.filter(col("pais") === "PE").collect().map(_.getAs[Double]("v")).toSeq == Seq(9.0))
+    assert(!Files.exists(Paths.get(dir, "fecha_proceso=2025-01-01")),
+      "a date directory left empty by the cleanup is removed")
   }
 
   test("versioned replaceWhere: commit pointer, replace semantics, crash safety, GC") {
