@@ -69,71 +69,27 @@ object SparkEntry {
     base
   }
 
-  /** Shared STAGING dir for a restart gate's input splits (round-12): the
-    * split files are a deterministic function of the SOURCE table (same
-    * projection, same cut rule every invocation), yet each gate invocation
-    * re-ran the quantile action plus three filter+coalesce(1) write jobs
-    * into its freshly-wiped work dir — ~0.9-1.2 s of the q353/q354/q359/
-    * q368 wall each (StreamBatchLedger's "outside-stream" bucket). This is
-    * the [[Tables]] `batchedStream` staging device applied to the restart
-    * feeds: build the split files ONCE per (gate, source identity) into a
-    * stamp-keyed shared dir, and have `put(k)` COPY file k into the gate's
-    * per-invocation work dir. Input LAYOUT staging only — every
-    * bench/verify run still executes the full streaming queries and
-    * recomputes all results from these parquet inputs; a regenerated
-    * testdata drop changes the stamp and forces a re-build.
-    */
-  private val splitStageLock = new Object
-  private def stagedSplitDir(tag: String, dir: String, table: String, n: Int)(
-      build: java.io.File => Unit): java.io.File = {
-    val src = new java.io.File(s"$dir/$table.parquet")
-    val stamp = s"$tag|$dir|${src.length()}|${src.lastModified()}|$n"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val stage = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-gatesplit-$key")
-    val done = new java.io.File(stage, "_SPLIT_DONE")
-    splitStageLock.synchronized {
-      if (!done.exists()) {
-        wipeTree(stage); stage.mkdirs()
-        build(stage)
-        done.createNewFile()
-        ()
-      }
-    }
-    stage
-  }
-
-  /** `put(k)` for a staged split dir: copy split k into the gate's `in`
-    * dir under its staged name with the pinned oldest-first mtime the file
-    * source orders on.
+  /** Staged input splits for a restart gate (round-12): the split files
+    * are a deterministic function of the SOURCE table (same projection,
+    * same cut rule every invocation), yet each gate invocation re-ran the
+    * quantile action plus three filter+coalesce(1) write jobs into its
+    * freshly-wiped work dir — ~0.9-1.2 s of the q353/q354/q359/q368 wall
+    * each (StreamBatchLedger's "outside-stream" bucket). So each gate stages
+    * its splits ONCE per source identity with [[graft.util.Staged]], and
+    * `put(k)` copies split k into the gate's per-invocation `in` dir,
+    * keeping the pinned oldest-first mtime the file source orders on.
+    * Input LAYOUT staging only — every bench/verify run still executes the
+    * full streaming queries and recomputes all results from these parquet
+    * inputs; a regenerated testdata drop changes the key and forces a
+    * re-build.
     */
   private def stagedPut(stage: java.io.File, in: java.io.File): Int => Unit =
     (k: Int) => {
-      val name = f"b$k%03d.parquet"
-      val dst = new java.io.File(in, name)
-      java.nio.file.Files.copy(new java.io.File(stage, name).toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      dst.setLastModified(1600000000000L + k * 600000L)
-      ()
-    }
-
-  /** Write single-file parquet `b00k.parquet` files under `stage`, one per
-    * split, from `splitOf(k)`. The per-gate build step behind
-    * [[stagedSplitDir]].
-    */
-  private def writeSplits(stage: java.io.File, n: Int,
-                          splitOf: Int => DataFrame): Unit =
-    (0 until n).foreach { k =>
-      val tmpd = new java.io.File(stage, s".tmp-$k")
-      splitOf(k).coalesce(1).write.mode("overwrite").parquet(tmpd.toString)
-      val part = Option(tmpd.listFiles()).getOrElse(Array.empty)
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"restart feed: split $k produced no part file"))
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(stage, f"b$k%03d.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      tmpd.listFiles().foreach(_.delete()); tmpd.delete()
+      val name = Tables.splitName(k)
+      java.nio.file.Files.copy(new java.io.File(stage, name).toPath,
+        new java.io.File(in, name).toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
       ()
     }
 
@@ -152,7 +108,7 @@ object SparkEntry {
     val cuts = ev.withColumn("__tsd", col("ts").cast("double"))
       .stat.approxQuantile("__tsd", Array(1.0 / 3, 2.0 / 3), 0.001)
     val tsd = col("ts").cast("double")
-    writeSplits(stage, 3, {
+    Tables.writeSplits(stage, 3, {
       case 0 => ev.filter(tsd <= cuts(0))
       case 1 => ev.filter(tsd > cuts(0) && tsd <= cuts(1))
       case _ => ev.filter(tsd > cuts(1))
@@ -1628,9 +1584,10 @@ object SparkEntry {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
       // same split rule as before (event_id mod 3), staged once per source
-      // identity and copied in — see stagedSplitDir
-      val stage = stagedSplitDir("q353-mod3", dir, "events", 3)(st =>
-        writeSplits(st, 3, k => ev.filter(pmod(col("event_id"), lit(3)) === k)))
+      // identity and copied in — see stagedPut
+      val stage = graft.util.Staged.dir("q353-mod3",
+          Seq(new java.io.File(s"$dir/events.parquet")), "v1")(st =>
+        Tables.writeSplits(st, 3, k => ev.filter(pmod(col("event_id"), lit(3)) === k)))
       val put = stagedPut(stage, inF)
       put(0); put(1)
       val schema = s.read.parquet(in).schema
@@ -1665,9 +1622,10 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
           col("l_returnflag"))
       // same split rule as before (l_orderkey mod 3), staged once per source
-      // identity and copied in — see stagedSplitDir
-      val stage = stagedSplitDir("q368-mod3", dir, "lineitem", 3)(st =>
-        writeSplits(st, 3, k => li.filter(pmod(col("l_orderkey"), lit(3)) === k)))
+      // identity and copied in — see stagedPut
+      val stage = graft.util.Staged.dir("q368-mod3",
+          Seq(new java.io.File(s"$dir/lineitem.parquet")), "v1")(st =>
+        Tables.writeSplits(st, 3, k => li.filter(pmod(col("l_orderkey"), lit(3)) === k)))
       val put = stagedPut(stage, inF)
       put(0); put(1)
       val schema = s.read.parquet(in).schema
@@ -1713,7 +1671,8 @@ object SparkEntry {
       val out = s"$base/out"; val ck = s"$base/ckpt"
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val stage = stagedSplitDir("q354-time3", dir, "events", 3)(
+      val stage = graft.util.Staged.dir("q354-time3",
+          Seq(new java.io.File(s"$dir/events.parquet")), "v1")(
         timeSplitThirds(ev, _))
       val put = stagedPut(stage, in)
       put(0); put(1)
@@ -1768,7 +1727,8 @@ object SparkEntry {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      val stage = stagedSplitDir("q359-time3", dir, "events", 3)(
+      val stage = graft.util.Staged.dir("q359-time3",
+          Seq(new java.io.File(s"$dir/events.parquet")), "v1")(
         timeSplitThirds(ev, _))
       val put = stagedPut(stage, in)
       put(0); put(1)

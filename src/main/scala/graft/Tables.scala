@@ -38,7 +38,7 @@ object Tables {
   }
 
   /** Single-file parquet read with the FOOTER SCHEMA cached per source
-    * identity (path + size + mtime — the [[srcStamp]] key): a bare
+    * identity (path + size + mtime): a bare
     * `spark.read.parquet(path)` runs a one-task schema-inference job per
     * call, which is pure fixed overhead when the same immutable test table
     * is opened hundreds of times in one process (round-11 measured ~2-3 such
@@ -95,10 +95,11 @@ object Tables {
     * everything in ONE microbatch, which never exercises state handoff,
     * watermark advance, or timer firing BETWEEN batches — the paths real
     * streaming jobs live on. These split a table into `n` single-file
-    * parquet splits in a deterministic temp dir (built once per
-    * (sfDir, table, mode), reused across queries and passes) and read them
-    * back with `maxFilesPerTrigger = 1`, mtime-ordered — exactly `n`
-    * microbatches, deterministic content and order.
+    * parquet splits in a staged dir ([[graft.util.Staged]]: built once per
+    * (source identity, table, mode, n), reused across queries, passes and
+    * processes) and read them back with `maxFilesPerTrigger = 1`,
+    * mtime-ordered — exactly `n` microbatches, deterministic content and
+    * order.
     *
     * Two split modes, chosen per operator semantics:
     *  - `"time"`: batch k = the k-th span of event time (exact-quantile
@@ -113,85 +114,76 @@ object Tables {
     */
   def eventsStreamBatched(spark: SparkSession, sfDir: String,
                           mode: String, n: Int = 3): DataFrame =
-    batchedStream(spark, apply(spark, sfDir, "events"), "event_id",
-      s"${srcStamp(sfDir, "events")}-events", mode, n)
+    batchedStream(spark, sfDir, "events", "event_id", mode, n)
 
   def documentsStreamBatched(spark: SparkSession, sfDir: String,
                              mode: String, n: Int = 3): DataFrame =
-    batchedStream(spark, apply(spark, sfDir, "documents"), "doc_id",
-      s"${srcStamp(sfDir, "documents")}-documents", mode, n)
+    batchedStream(spark, sfDir, "documents", "doc_id", mode, n)
 
-  /** Split-cache key component tied to the SOURCE file's identity (path +
-    * size + mtime): a regenerated testdata drop must invalidate any split
-    * dir a previous run left in the temp dir, or a stale split would
-    * silently feed old data to the multi-batch gates.
-    */
-  private def srcStamp(sfDir: String, table: String): String = {
-    val f = new java.io.File(s"$sfDir/$table.parquet")
-    s"$sfDir|${f.length()}|${f.lastModified()}"
-  }
+  /** The single-file parquet under the scale-factor dir: the source whose
+    * identity keys every staged artifact built from it. */
+  private def source(sfDir: String, table: String): java.io.File =
+    new java.io.File(s"$sfDir/$table.parquet")
 
-  private val splitLock = new Object
-
-  private def batchedStream(spark: SparkSession, base: DataFrame, idCol: String,
-                            tag: String, splitMode: String, n: Int): DataFrame = {
+  private def batchedStream(spark: SparkSession, sfDir: String, table: String,
+                            idCol: String, splitMode: String, n: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     require(splitMode == "time" || splitMode == "hash",
       s"split mode must be time|hash: $splitMode")
     require(n >= 2 && n <= 16, s"n must be in [2,16]: $n")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$tag|$splitMode|$n".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-batched-$key")
-    val done = new java.io.File(dir, "_SPLIT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        dir.mkdirs()
-        val withB = splitMode match {
-          case "hash" =>
-            base.withColumn("__b", pmod(
-              conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10).cast("long"),
-              lit(n.toLong)).cast("int"))
-          case "time" =>
-            // exact quantiles (relativeError 0) of event time: the cutoffs
-            // are data values, so `ts <= cut` puts every tie in the earlier
-            // batch and later batches sit strictly above the watermark the
-            // earlier ones advanced to
-            val cuts = base.withColumn("__tsd", col("ts").cast("double"))
-              .stat.approxQuantile("__tsd", (1 until n).map(_.toDouble / n).toArray, 0.0)
-            base.withColumn("__b", cuts.foldLeft(lit(0)) { (acc, c) =>
-              acc + when(col("ts").cast("double") > c, 1).otherwise(0)
-            })
-        }
-        (0 until n).foreach { k =>
-          val tmp = new java.io.File(dir, s".tmp-$k")
-          withB.filter(col("__b") === k).drop("__b")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Option(tmp.listFiles()).getOrElse(Array.empty)
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(sys.error(s"batchedStream: split $k of $tag produced no part file " +
-              "(empty split — the table is too small for this n)"))
-          val dst = new java.io.File(dir, f"b$k%03d.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          // distinct ascending mtimes: the file source processes
-          // oldest-first, which makes the batch ORDER deterministic
-          dst.setLastModified(1600000000000L + k * 600000L)
-          tmp.listFiles().foreach(_.delete()); tmp.delete()
-          ()
-        }
-        done.createNewFile()
-        ()
+    val base = apply(spark, sfDir, table)
+    val dir = graft.util.Staged.dir(s"batched-$table-$splitMode-$n",
+        Seq(source(sfDir, table)), "v1") { st =>
+      val withB = splitMode match {
+        case "hash" =>
+          base.withColumn("__b", pmod(
+            conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10).cast("long"),
+            lit(n.toLong)).cast("int"))
+        case "time" =>
+          // exact quantiles (relativeError 0) of event time: the cutoffs
+          // are data values, so `ts <= cut` puts every tie in the earlier
+          // batch and later batches sit strictly above the watermark the
+          // earlier ones advanced to
+          val cuts = base.withColumn("__tsd", col("ts").cast("double"))
+            .stat.approxQuantile("__tsd", (1 until n).map(_.toDouble / n).toArray, 0.0)
+          base.withColumn("__b", cuts.foldLeft(lit(0)) { (acc, c) =>
+            acc + when(col("ts").cast("double") > c, 1).otherwise(0)
+          })
       }
+      writeSplits(st, n, k => withB.filter(col("__b") === k).drop("__b"))
     }
     val schema: StructType =
-      footerSchema(spark, new java.io.File(dir, "b000.parquet").toString)
+      footerSchema(spark, new java.io.File(dir, splitName(0)).toString)
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("latestFirst", "false")
       .option("pathGlobFilter", "b*.parquet")
       .parquet(dir.toString)
   }
+
+  /** File name of split `k` in a split dir. */
+  private[graft] def splitName(k: Int): String = f"b$k%03d.parquet"
+
+  /** Write `n` single-file parquet splits under `dir`, split k from
+    * `splitOf(k)` as [[splitName]]`(k)`. The mtimes are pinned distinct and
+    * ascending: the file source processes oldest-first, which makes the
+    * batch ORDER deterministic (a copy that keeps the mtime keeps the order).
+    */
+  private[graft] def writeSplits(dir: java.io.File, n: Int,
+                                 splitOf: Int => DataFrame): Unit =
+    (0 until n).foreach { k =>
+      val tmp = new java.io.File(dir, s".tmp-$k")
+      splitOf(k).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = Option(tmp.listFiles()).getOrElse(Array.empty)
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"split $k under $dir produced no part file " +
+          "(empty split — the table is too small for this n)"))
+      val dst = new java.io.File(dir, splitName(k))
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(1600000000000L + k * 600000L)
+      tmp.listFiles().foreach(_.delete()); tmp.delete()
+      ()
+    }
 
   /** Streaming read of the documents table (file source over the single
     * parquet under the scale-factor dir; schema from the footer). The feed
@@ -225,8 +217,8 @@ object Tables {
         .option("pathGlobFilter", "events.parquet").parquet(sfDir))
   }
 
-  /** Data-skipping demo layouts over lineitem, cached per source identity
-    * (the [[srcStamp]] device): 16 files laid out so that per-file min/max
+  /** Data-skipping demo layouts over lineitem, staged per source identity
+    * ([[graft.util.Staged]]): 16 files laid out so that per-file min/max
     * stats actually prune —
     *
     *  - `"date"`: range-partitioned + sorted by ship date; a date-window
@@ -244,74 +236,63 @@ object Tables {
   def skippingLayout(spark: SparkSession, sfDir: String, layout: String): String = {
     import org.apache.spark.sql.functions._
     require(layout == "date" || layout == "zorder", s"layout must be date|zorder: $layout")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "lineitem")}|skip-$layout|v4".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-skiplayout-$key")
-    val done = new java.io.File(dir, "_LAYOUT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        val li = apply(spark, sfDir, "lineitem")
-          .withColumn("l_shipdate_d", to_date(col("l_shipdate")))
-          .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-            "l_extendedprice", "l_discount", "l_returnflag", "l_shipdate_d")
-        val laid = layout match {
-          case "date" =>
-            li.repartitionByRange(16, col("l_shipdate_d"))
-              .sortWithinPartitions("l_shipdate_d")
-          case "zorder" =>
-            // QUANTILE-bucket each key into 64 equal-count buckets before
-            // interleaving (what Delta's OPTIMIZE ZORDER does via per-column
-            // range-partition ids). Equi-width bucketing breaks on sparse or
-            // skewed domains — bucket occupancy goes lumpy, the equal-count
-            // z range-split no longer aligns with the bit grid, and files
-            // stop forming the 4×4 (partkey × suppkey) quarters that make
-            // both dimensions prunable (measured: 7/16 files for a
-            // conjunctive quarter predicate vs ~1/16 with quantile buckets).
-            // approxQuantile is distributed; the driver holds 63 doubles per
-            // key; the per-row bucket is a depth-6 `when` binary search —
-            // pure codegen, no join, no window.
-            // ONE multi-column quantile job — the per-column overload
-            // would scan lineitem once per key
-            val allCuts = li.stat.approxQuantile(
-              Array("l_partkey", "l_suppkey"),
-              (1 until 64).map(_ / 64.0).toArray, 0.001)
-            def cuts(c: String): Array[Double] =
-              if (c == "l_partkey") allCuts(0) else allCuts(1)
-            def bucket(c: org.apache.spark.sql.Column, cs: Array[Double]) = {
-              val v = c.cast("double")
-              // #{i : cs(i) < value} via binary search over the when-tree
-              def bs(lo: Int, hi: Int): org.apache.spark.sql.Column =
-                if (lo >= hi) lit(lo.toLong)
-                else {
-                  val mid = (lo + hi) / 2
-                  when(v > lit(cs(mid)), bs(mid + 1, hi)).otherwise(bs(lo, mid))
-                }
-              bs(0, cs.length)
-            }
-            val z = graft.ops.Relational.zOrderValue(
-              bucket(col("l_partkey"), cuts("l_partkey")),
-              bucket(col("l_suppkey"), cuts("l_suppkey")), 6)
-            li.withColumn("__z", z)
-              .repartitionByRange(16, col("__z"))
-              .sortWithinPartitions("__z")
-              .drop("__z")
-        }
-        laid.write.mode("overwrite").parquet(dir.toString)
-        graft.etl.Skipping.writeManifest(spark, dir.toString,
-          Seq("l_shipdate_d", "l_partkey", "l_suppkey", "l_quantity", "l_returnflag"))
-        // the date layout additionally carries a Bloom index on the SECONDARY
-        // key (l_orderkey is scattered across the date-sorted files, so its
-        // per-file min/max span everything and only a bloom can prune an
-        // equality probe — the q361 gate)
-        if (layout == "date")
-          graft.etl.BloomSkipping.writeBloomIndex(spark, dir.toString, Seq("l_orderkey"))
-        done.createNewFile()
-        ()
+    graft.util.Staged.dir(s"skiplayout-$layout", Seq(source(sfDir, "lineitem")), "v4") { dir =>
+      val li = apply(spark, sfDir, "lineitem")
+        .withColumn("l_shipdate_d", to_date(col("l_shipdate")))
+        .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
+          "l_extendedprice", "l_discount", "l_returnflag", "l_shipdate_d")
+      val laid = layout match {
+        case "date" =>
+          li.repartitionByRange(16, col("l_shipdate_d"))
+            .sortWithinPartitions("l_shipdate_d")
+        case "zorder" =>
+          // QUANTILE-bucket each key into 64 equal-count buckets before
+          // interleaving (what Delta's OPTIMIZE ZORDER does via per-column
+          // range-partition ids). Equi-width bucketing breaks on sparse or
+          // skewed domains — bucket occupancy goes lumpy, the equal-count
+          // z range-split no longer aligns with the bit grid, and files
+          // stop forming the 4×4 (partkey × suppkey) quarters that make
+          // both dimensions prunable (measured: 7/16 files for a
+          // conjunctive quarter predicate vs ~1/16 with quantile buckets).
+          // approxQuantile is distributed; the driver holds 63 doubles per
+          // key; the per-row bucket is a depth-6 `when` binary search —
+          // pure codegen, no join, no window.
+          // ONE multi-column quantile job — the per-column overload
+          // would scan lineitem once per key
+          val allCuts = li.stat.approxQuantile(
+            Array("l_partkey", "l_suppkey"),
+            (1 until 64).map(_ / 64.0).toArray, 0.001)
+          def cuts(c: String): Array[Double] =
+            if (c == "l_partkey") allCuts(0) else allCuts(1)
+          def bucket(c: org.apache.spark.sql.Column, cs: Array[Double]) = {
+            val v = c.cast("double")
+            // #{i : cs(i) < value} via binary search over the when-tree
+            def bs(lo: Int, hi: Int): org.apache.spark.sql.Column =
+              if (lo >= hi) lit(lo.toLong)
+              else {
+                val mid = (lo + hi) / 2
+                when(v > lit(cs(mid)), bs(mid + 1, hi)).otherwise(bs(lo, mid))
+              }
+            bs(0, cs.length)
+          }
+          val z = graft.ops.Relational.zOrderValue(
+            bucket(col("l_partkey"), cuts("l_partkey")),
+            bucket(col("l_suppkey"), cuts("l_suppkey")), 6)
+          li.withColumn("__z", z)
+            .repartitionByRange(16, col("__z"))
+            .sortWithinPartitions("__z")
+            .drop("__z")
       }
-    }
-    dir.toString
+      laid.write.mode("overwrite").parquet(dir.toString)
+      graft.etl.Skipping.writeManifest(spark, dir.toString,
+        Seq("l_shipdate_d", "l_partkey", "l_suppkey", "l_quantity", "l_returnflag"))
+      // the date layout additionally carries a Bloom index on the SECONDARY
+      // key (l_orderkey is scattered across the date-sorted files, so its
+      // per-file min/max span everything and only a bloom can prune an
+      // equality probe — the q361 gate)
+      if (layout == "date")
+        graft.etl.BloomSkipping.writeBloomIndex(spark, dir.toString, Seq("l_orderkey"))
+    }.toString
   }
 
   /** Deliberately FRAGMENTED lineitem copy (48 tiny files) compacted by
@@ -322,38 +303,26 @@ object Tables {
     * the skipping manifest + bloom index fresh, so a silently inert
     * compactor can never pass the gate.
     */
-  def compactedLayout(spark: SparkSession, sfDir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "lineitem")}|compact|v2".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-compactlayout-$key")
-    val done = new java.io.File(dir, "_LAYOUT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        apply(spark, sfDir, "lineitem")
-          .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
-            "l_returnflag")
-          .repartition(48)
-          .write.mode("overwrite").parquet(dir.toString)
-        graft.etl.Skipping.writeManifest(spark, dir.toString,
-          Seq("l_orderkey", "l_quantity", "l_returnflag"))
-        graft.etl.BloomSkipping.writeBloomIndex(spark, dir.toString, Seq("l_orderkey"))
-        val fs = new org.apache.hadoop.fs.Path(dir.toString)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val total = graft.etl.Skipping
-          .listDataFiles(fs, new org.apache.hadoop.fs.Path(dir.toString))
-          .map(_._2).sum
-        val rep = graft.etl.Compaction.compact(spark, dir.toString,
-          targetBytes = total / 6 + 1)
-        require(rep.filesAfter < rep.filesBefore,
-          s"compaction must engage: ${rep.filesBefore} -> ${rep.filesAfter}")
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
-  }
+  def compactedLayout(spark: SparkSession, sfDir: String): String =
+    graft.util.Staged.dir("compactlayout", Seq(source(sfDir, "lineitem")), "v2") { dir =>
+      apply(spark, sfDir, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
+          "l_returnflag")
+        .repartition(48)
+        .write.mode("overwrite").parquet(dir.toString)
+      graft.etl.Skipping.writeManifest(spark, dir.toString,
+        Seq("l_orderkey", "l_quantity", "l_returnflag"))
+      graft.etl.BloomSkipping.writeBloomIndex(spark, dir.toString, Seq("l_orderkey"))
+      val fs = new org.apache.hadoop.fs.Path(dir.toString)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val total = graft.etl.Skipping
+        .listDataFiles(fs, new org.apache.hadoop.fs.Path(dir.toString))
+        .map(_._2).sum
+      val rep = graft.etl.Compaction.compact(spark, dir.toString,
+        targetBytes = total / 6 + 1)
+      require(rep.filesAfter < rep.filesBefore,
+        s"compaction must engage: ${rep.filesBefore} -> ${rep.filesAfter}")
+    }.toString
 
   /** ORC sink+source round-trip artifact (q364): a lineitem slice written
     * as a PARTITIONED ORC table (Spark's built-in v2 ORC source — columnar,
@@ -362,26 +331,14 @@ object Tables {
     * with a partition filter, so both the writer and the
     * partition-pruning read path are under oracle.
     */
-  def orcLayout(spark: SparkSession, sfDir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "lineitem")}|orc|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-orclayout-$key")
-    val done = new java.io.File(dir, "_LAYOUT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        apply(spark, sfDir, "lineitem")
-          .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
-            "l_returnflag", "l_linestatus")
-          .write.mode("overwrite").partitionBy("l_returnflag")
-          .orc(dir.toString)
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
-  }
+  def orcLayout(spark: SparkSession, sfDir: String): String =
+    graft.util.Staged.dir("orclayout", Seq(source(sfDir, "lineitem")), "v1") { dir =>
+      apply(spark, sfDir, "lineitem")
+        .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
+          "l_returnflag", "l_linestatus")
+        .write.mode("overwrite").partitionBy("l_returnflag")
+        .orc(dir.toString)
+    }.toString
 
   /** JSONL sink+source round-trip artifact (q365): `documents` written as
     * line-delimited JSON (the interchange format every LLM-corpus
@@ -390,23 +347,11 @@ object Tables {
     * `text` itself (length sums), so any escaping/unicode infidelity in
     * the writer or parser breaks the hash.
     */
-  def jsonlLayout(spark: SparkSession, sfDir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "documents")}|jsonl|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-jsonllayout-$key")
-    val done = new java.io.File(dir, "_LAYOUT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        apply(spark, sfDir, "documents")
-          .write.mode("overwrite").json(dir.toString)
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
-  }
+  def jsonlLayout(spark: SparkSession, sfDir: String): String =
+    graft.util.Staged.dir("jsonllayout", Seq(source(sfDir, "documents")), "v1") { dir =>
+      apply(spark, sfDir, "documents")
+        .write.mode("overwrite").json(dir.toString)
+    }.toString
 
   /** Month-partitioned lineitem layout for q372 (dynamic partition
     * pruning): the star-schema fact layout — partitioned by
@@ -418,26 +363,17 @@ object Tables {
     */
   def dppLayout(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions.{col, date_format}
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "lineitem")}|dpp|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-dpplayout-$key")
-    val done = new java.io.File(dir, "_LAYOUT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        apply(spark, sfDir, "lineitem")
-          .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
-            col("l_shipdate"),
-            date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
-          .write.mode("overwrite").partitionBy("ship_month")
-          .parquet(dir.toString)
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
+    graft.util.Staged.dir("dpplayout", Seq(source(sfDir, "lineitem")), "v1") { dir =>
+      apply(spark, sfDir, "lineitem")
+        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
+          col("l_shipdate"),
+          date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
+        .write.mode("overwrite").partitionBy("ship_month")
+        .parquet(dir.toString)
+    }.toString
   }
+
+  private val bucketedPairLock = new Object
 
   /** Co-bucketed table pair for q369 (orders + lineitem, both
     * `bucketBy(8, o_orderkey)` sorted within buckets): the layout that
@@ -446,15 +382,19 @@ object Tables {
     * biggest cost in a fact join) never happens, per-query, amortized
     * over every query that joins on the key. Built once per source
     * identity per JVM; table names carry the stamp so scale factors
-    * never cross-contaminate a shared warehouse.
+    * never cross-contaminate a shared warehouse. Catalog tables, not a
+    * directory, so this is not a [[graft.util.Staged]] artifact.
     */
   def bucketedPair(spark: SparkSession, sfDir: String): (String, String) = {
+    def stamp(table: String): String = {
+      val f = source(sfDir, table)
+      s"$sfDir|${f.length()}|${f.lastModified()}"
+    }
     val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "orders")}|${srcStamp(sfDir, "lineitem")}|bkt|v1"
-        .getBytes("UTF-8"))
+      .digest(s"${stamp("orders")}|${stamp("lineitem")}|bkt|v1".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
     val (ot, lt) = (s"g369_orders_$key", s"g369_lineitem_$key")
-    splitLock.synchronized {
+    bucketedPairLock.synchronized {
       if (!(spark.catalog.tableExists(ot) && spark.catalog.tableExists(lt))) {
         for (t <- Seq(ot, lt)) {
           spark.sql(s"DROP TABLE IF EXISTS $t")
@@ -488,25 +428,13 @@ object Tables {
     * over the round-tripped `text` itself: any writer/parser infidelity
     * breaks the hash, not just the row count.
     */
-  def xmlLayout(spark: SparkSession, sfDir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "documents")}|xml|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-xmllayout-$key")
-    val done = new java.io.File(dir, "_LAYOUT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        apply(spark, sfDir, "documents")
-          .write.mode("overwrite").option("rowTag", "doc")
-          .partitionBy("lang")
-          .format("xml").save(dir.toString)
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
-  }
+  def xmlLayout(spark: SparkSession, sfDir: String): String =
+    graft.util.Staged.dir("xmllayout", Seq(source(sfDir, "documents")), "v1") { dir =>
+      apply(spark, sfDir, "documents")
+        .write.mode("overwrite").option("rowTag", "doc")
+        .partitionBy("lang")
+        .format("xml").save(dir.toString)
+    }.toString
 
   /** CSV sink+source round-trip artifact (q367): `documents` written
     * through Spark's CSV writer (default quote/escape discipline) and
@@ -519,56 +447,35 @@ object Tables {
     */
   def csvLayout(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions.col
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "documents")}|csv|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-csvlayout-$key")
-    val done = new java.io.File(dir, "_LAYOUT_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        val docs = apply(spark, sfDir, "documents")
-        val crRows = docs
-          .filter(col("text").contains("\r") || col("text") === "")
-          .limit(1).count()
-        require(crRows == 0L,
-          "csvLayout: corpus has CR characters or empty strings; the " +
-            "multiLine parser normalizes quoted CRLF and the nullValue " +
-            "default swallows \"\" — the round-trip would drift (both " +
-            "divergences pinned in FormatsSpec)")
-        docs.write.mode("overwrite").option("header", "false").csv(dir.toString)
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
+    graft.util.Staged.dir("csvlayout", Seq(source(sfDir, "documents")), "v1") { dir =>
+      val docs = apply(spark, sfDir, "documents")
+      val crRows = docs
+        .filter(col("text").contains("\r") || col("text") === "")
+        .limit(1).count()
+      require(crRows == 0L,
+        "csvLayout: corpus has CR characters or empty strings; the " +
+          "multiLine parser normalizes quoted CRLF and the nullValue " +
+          "default swallows \"\" — the round-trip would drift (both " +
+          "divergences pinned in FormatsSpec)")
+      docs.write.mode("overwrite").option("header", "false").csv(dir.toString)
+    }.toString
   }
 
   /** Persisted inverted index over `documents` ([[graft.ops.Lexical]]),
-    * built once per source identity (the [[srcStamp]] device) and reused
-    * across queries and passes — the amortization a real index exists
-    * for. Build = one tokenize + tf groupBy + bucket-partitioned write.
+    * staged once per source identity ([[graft.util.Staged]]) and reused
+    * across queries, passes and processes — the amortization a real index
+    * exists for. Build = one tokenize + tf groupBy + bucket-partitioned
+    * write.
     */
   def lexicalIndex(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions.col
-    val key = java.security.MessageDigest.getInstance("MD5")
-      // v2: bucket-led write sort (the round-10 review fix) — bump forces
-      // cached indexes to rebuild with the guaranteed within-shard tok order
-      .digest(s"${srcStamp(sfDir, "documents")}|lexidx|v2".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-lexidx-$key")
-    val done = new java.io.File(dir, "_INDEX_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        graft.ops.Lexical.buildIndex(
-          graft.ops.Par.spread(apply(spark, sfDir, "documents"), col("doc_id")),
-          "doc_id", "text", dir.toString)
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
+    // v2: bucket-led write sort (the round-10 review fix) — bump forces
+    // cached indexes to rebuild with the guaranteed within-shard tok order
+    graft.util.Staged.dir("lexidx", Seq(source(sfDir, "documents")), "v2") { dir =>
+      graft.ops.Lexical.buildIndex(
+        graft.ops.Par.spread(apply(spark, sfDir, "documents"), col("doc_id")),
+        "doc_id", "text", dir.toString)
+    }.toString
   }
 
   /** The INCREMENTALLY-maintained twin of [[lexicalIndex]]: built over
@@ -580,23 +487,13 @@ object Tables {
     */
   def lexicalIndexIncremental(spark: SparkSession, sfDir: String): String = {
     import org.apache.spark.sql.functions.col
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${srcStamp(sfDir, "documents")}|lexidxinc|v1".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val dir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft-lexidxinc-$key")
-    val done = new java.io.File(dir, "_INDEX_DONE")
-    splitLock.synchronized {
-      if (!done.exists()) {
-        val docs = graft.ops.Par.spread(apply(spark, sfDir, "documents"), col("doc_id"))
-        graft.ops.Lexical.buildIndex(
-          docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", dir.toString)
-        graft.ops.Lexical.appendToIndex(
-          docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", dir.toString)
-        done.createNewFile()
-        ()
-      }
-    }
-    dir.toString
+    graft.util.Staged.dir("lexidxinc", Seq(source(sfDir, "documents")), "v1") { dir =>
+      val docs = graft.ops.Par.spread(apply(spark, sfDir, "documents"), col("doc_id"))
+      graft.ops.Lexical.buildIndex(
+        docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", dir.toString)
+      graft.ops.Lexical.appendToIndex(
+        docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", dir.toString)
+      ()
+    }.toString
   }
 }

@@ -24,7 +24,7 @@ import graft.config.{CountryParam, EtlConfig}
 object Pipeline {
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** Per-sink-root write locks for [[runConcurrent]]: countries are
+  /** Per-sink-root write locks for a concurrent [[run]]: countries are
     * independent SLICES, but they share the four table roots, and two of
     * the shared mechanics are not concurrent-safe inside one driver —
     * the side-index refresh (updateManifest/bloom: list-then-commit) and
@@ -61,21 +61,44 @@ object Pipeline {
     override def toString: String = s"bronze=$bronze clean=$clean quarantine=$quarantine"
   }
 
-  /** Run every unprocessed country; returns countries successfully processed.
+  /** Run every unprocessed country; returns countries successfully
+    * processed, in CONFIG order.
     *
     * Run-level events go to a per-run timestamped log file ([[RunLog]],
     * reference S7) under `logDir` — default `<output_root>/log` — as well as
     * the console. Config-validation failures happen before the output root is
     * known, so they are console-only (the reference logs them to its
     * pre-created volume path instead; same information, different home).
+    *
+    * Stage error isolation is per country (reference O3): a failed country
+    * is logged and NOT marked processed; the others proceed.
+    *
+    * `maxParallel` > 1 opts into CONCURRENT countries. The reference's loop
+    * is sequential (`ETL_Entregas_Base.ipynb:708-723`); at 100 TB the
+    * country slices are independent and a country's Silver aggregation can
+    * overlap another's Bronze scan. Semantics are identical by
+    * construction: every sink WRITE (and its side-index refresh)
+    * serializes on a per-root monitor ([[rootLocks]]), and the YAML
+    * run-state write-back serializes on one lock, threading the latest
+    * config through (`markProcessed` is read-modify-write). Lock order per
+    * country is fixed (bronze → silverClean → processedDir → quarantine),
+    * so no deadlock. At the default of 1 every country runs inline on the
+    * caller's thread with `eager = false` (see [[runCountry]]).
+    *
+    * `beforeCountry` is a test seam: it runs just before the country's
+    * first stage (inside the worker when concurrent), where a spec can
+    * inject a failure and prove isolation.
     */
   def run(
       spark: SparkSession,
       configPath: String,
       auditTs: Column = current_timestamp(),
       logDir: Option[String] = None,
-      logClock: () => java.time.LocalDateTime = () => java.time.LocalDateTime.now()
+      logClock: () => java.time.LocalDateTime = () => java.time.LocalDateTime.now(),
+      maxParallel: Int = 1,
+      beforeCountry: CountryParam => Unit = _ => ()
   ): List[String] = {
+    require(maxParallel >= 1, s"maxParallel must be >= 1, got $maxParallel")
     EtlConfig.load(configPath) match {
       case Left(errs) =>
         errs.foreach(e => log.error(s"config invalid: $e"))
@@ -97,25 +120,38 @@ object Pipeline {
         def rinfo(m: String): Unit = rl.fold(log.info(m))(_.info(m))
         def rerror(m: String, e: Throwable): Unit = rl.fold(log.error(m, e))(_.error(m, e))
         try {
-          rinfo(s"config $configPath loaded: ${cfg0.params.size} country blocks")
-          var cfg = cfg0
-          val done = scala.collection.mutable.ListBuffer.empty[String]
-          cfg0.params.foreach { p =>
+          rinfo(s"config $configPath loaded: ${cfg0.params.size} country blocks" +
+            (if (maxParallel > 1) s" (concurrent, maxParallel=$maxParallel)" else ""))
+          val todo = cfg0.params.filter { p =>
             if (p.process) rinfo(s"skip ${p.country}: already processed")
-            else {
-              try {
-                val counts = runCountry(spark, cfg, p, auditTs)
-                cfg = EtlConfig.markProcessed(configPath, cfg, p.country)
-                done += p.country
-                rinfo(s"country ${p.country} done [${p.startDate}..${p.endDate}] $counts")
-              } catch {
-                case e: Exception =>
-                  // stage error isolation: log and continue with the next
-                  // country (reference O3) — but do NOT mark processed.
-                  rerror(s"country ${p.country} failed: ${e.getMessage}", e)
-              }
-            }
+            !p.process
           }
+          val configLock = new Object
+          var cfg = cfg0
+          val ok = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+          def country(p: CountryParam): Unit =
+            try {
+              beforeCountry(p)
+              val counts = runCountry(spark, cfg0, p, auditTs, eager = maxParallel > 1)
+              configLock.synchronized {
+                cfg = EtlConfig.markProcessed(configPath, cfg, p.country)
+              }
+              ok.add(p.country)
+              rinfo(s"country ${p.country} done [${p.startDate}..${p.endDate}] $counts")
+            } catch {
+              case e: Exception =>
+                rerror(s"country ${p.country} failed: ${e.getMessage}", e)
+            }
+          if (maxParallel == 1) todo.foreach(country)
+          else {
+            val pool = java.util.concurrent.Executors.newFixedThreadPool(
+              math.min(maxParallel, math.max(todo.size, 1)))
+            try {
+              todo.map(p => pool.submit(new Runnable { def run(): Unit = country(p) }))
+                .foreach(_.get()) // Runnable: get() rethrows only pool errors
+            } finally pool.shutdown()
+          }
+          val done = todo.map(_.country).filter(ok.contains)
           rinfo(s"run complete: processed=${done.mkString(",")}")
           done.toList
         } finally rl.foreach(_.close())
@@ -124,7 +160,7 @@ object Pipeline {
 
   /** One country end-to-end: EP1 (Bronze) then EP2 (Silver split).
     *
-    * `eager` (set by [[runConcurrent]]): materialize the persisted
+    * `eager` (set by a concurrent [[run]]): materialize the persisted
     * enriched frame while still holding the Bronze root's lock, so a
     * concurrent country's partition overwrite can never delete files out
     * from under this country's in-flight scan (only a hazard when the
@@ -224,95 +260,5 @@ object Pipeline {
       }
       CountryCounts(bronzeRows, cleanRows, quarantineRows)
     } finally enriched.unpersist()
-  }
-
-  /** Opt-in CONCURRENT per-country orchestration. The reference's loop is
-    * sequential (`ETL_Entregas_Base.ipynb:708-723`); at 100 TB the country
-    * slices are independent and a country's Silver aggregation can overlap
-    * another's Bronze scan. Semantics are identical to [[run]] by
-    * construction:
-    *
-    *  - every sink WRITE (and its side-index refresh) serializes on a
-    *    per-root monitor — countries touch disjoint (country, date)
-    *    partitions, but manifest/bloom refresh and the quarantine's
-    *    read-keep-union-rewrite are list-then-commit and must not race;
-    *  - the YAML run-state write-back serializes on one lock, threading
-    *    the latest config through (`markProcessed` is read-modify-write);
-    *  - stage error isolation is per-country, as in [[run]]: a failed
-    *    country is logged and NOT marked processed; the others proceed.
-    *
-    * Lock order per country is fixed (bronze → silverClean → processedDir
-    * → quarantine), so no deadlock. Returns successfully processed
-    * countries in CONFIG order (not completion order) — same value a
-    * sequential run over the same config returns.
-    *
-    * `beforeCountry` is a test seam: it runs inside the worker just before
-    * the country's first stage, where a spec can inject a failure and
-    * prove isolation under concurrency.
-    */
-  def runConcurrent(
-      spark: SparkSession,
-      configPath: String,
-      maxParallel: Int = 4,
-      auditTs: Column = current_timestamp(),
-      logDir: Option[String] = None,
-      logClock: () => java.time.LocalDateTime = () => java.time.LocalDateTime.now(),
-      beforeCountry: CountryParam => Unit = _ => ()
-  ): List[String] = {
-    require(maxParallel >= 1, s"maxParallel must be >= 1, got $maxParallel")
-    EtlConfig.load(configPath) match {
-      case Left(errs) =>
-        errs.foreach(e => log.error(s"config invalid: $e"))
-        throw new IllegalArgumentException(
-          s"config validation failed: ${errs.mkString("; ")}"
-        )
-      case Right(cfg0) =>
-        val rl: Option[RunLog] =
-          try Some(RunLog(logDir.getOrElse(s"${cfg0.outputRoot}/log"), logClock))
-          catch {
-            case e: Exception =>
-              log.warn(s"run-log file sink unavailable (${e.getMessage}); console only")
-              None
-          }
-        def rinfo(m: String): Unit = rl.fold(log.info(m))(_.info(m))
-        def rerror(m: String, e: Throwable): Unit = rl.fold(log.error(m, e))(_.error(m, e))
-        try {
-          rinfo(s"config $configPath loaded: ${cfg0.params.size} country blocks " +
-            s"(concurrent, maxParallel=$maxParallel)")
-          val todo = cfg0.params.filter { p =>
-            if (p.process) rinfo(s"skip ${p.country}: already processed")
-            !p.process
-          }
-          val configLock = new Object
-          var cfg = cfg0
-          val ok = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(maxParallel, math.max(todo.size, 1)))
-          try {
-            val futures = todo.map { p =>
-              pool.submit(new Runnable {
-                override def run(): Unit = {
-                  try {
-                    beforeCountry(p)
-                    val counts = runCountry(spark, cfg0, p, auditTs, eager = true)
-                    configLock.synchronized {
-                      cfg = EtlConfig.markProcessed(configPath, cfg, p.country)
-                    }
-                    ok.add(p.country)
-                    rinfo(s"country ${p.country} done [${p.startDate}..${p.endDate}] $counts")
-                  } catch {
-                    case e: Exception =>
-                      rerror(s"country ${p.country} failed: ${e.getMessage}", e)
-                  }
-                }
-              })
-            }
-            futures.foreach(_.get()) // Runnable: get() rethrows only pool errors
-          } finally pool.shutdown()
-          val done = todo.map(_.country).filter(ok.contains)
-          rinfo(s"run complete: processed=${done.mkString(",")}")
-          done.toList
-        } finally rl.foreach(_.close())
-    }
   }
 }

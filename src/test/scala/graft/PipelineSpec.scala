@@ -231,7 +231,7 @@ class PipelineSpec extends SparkTestBase {
     val (seqDir, seqCfg) = fixture()
     val (conDir, conCfg) = fixture()
     val seqDone = Pipeline.run(spark, seqCfg, auditTs = fixedTs)
-    val conDone = Pipeline.runConcurrent(spark, conCfg, maxParallel = 2,
+    val conDone = Pipeline.run(spark, conCfg, maxParallel = 2,
       auditTs = fixedTs)
     assert(seqDone == conDone, "processed list must match in CONFIG order")
     assert(allTables(seqDir.toString) == allTables(conDir.toString),
@@ -254,7 +254,7 @@ class PipelineSpec extends SparkTestBase {
     val (conDir, conCfg) = fixture()
     // inject: PE's worker dies while EC's worker is (possibly) mid-write —
     // the failure must not mark PE processed nor disturb EC's tables
-    val done1 = Pipeline.runConcurrent(spark, conCfg, maxParallel = 2,
+    val done1 = Pipeline.run(spark, conCfg, maxParallel = 2,
       auditTs = fixedTs,
       beforeCountry = p =>
         if (p.country == "PE") throw new RuntimeException("injected PE failure"))
@@ -266,7 +266,7 @@ class PipelineSpec extends SparkTestBase {
       "failed PE must NOT be marked processed (reference bug stays fixed)")
     // retry: only PE runs (EC skips on run state); outcome converges to
     // the sequential oracle exactly
-    val done2 = Pipeline.runConcurrent(spark, conCfg, maxParallel = 2,
+    val done2 = Pipeline.run(spark, conCfg, maxParallel = 2,
       auditTs = fixedTs)
     assert(done2 == List("PE"))
     assert(allTables(seqDir.toString) == allTables(conDir.toString),
