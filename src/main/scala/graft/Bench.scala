@@ -1,83 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Honor the submitted master (spark-submit / -Dspark.master); only fall
-    // back to a local default when none was provided. The previous round
+    // GraftSession.get honors a submitted master and only falls back to
+    // local[SPARK_GRAFT_CPUS] when none was provided. An earlier round
     // silently defaulted to local[8] because 8 threads benched fastest on
-    // ~100 MB inputs — but that optimized the harness, not the engine. The
+    // ~100 MB inputs — that optimized the harness, not the engine. The
     // scale-correct lever for small inputs under many cores is PARTITION
-    // SIZING, applied below, not shrinking the cluster.
-    val submitted = new org.apache.spark.SparkConf().contains("spark.master")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle partitions sized to the DATA (sf0.1 ≈ 100 MB ⇒ ~8 × ~10 MB),
-    // independent of core count: with sub-second queries, reducer-task
-    // scheduling overhead dominates past the point where partitions hold a
-    // few MB each, so parallelism beyond the data's natural split count
-    // only adds latency. CPU-bound stages (n-gram explosion, pair scoring)
-    // override this via Par.spread's explicit counts where per-row cost —
-    // not bytes — is the bottleneck.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    // Generated-class cache sized to the WORKLOAD, not the 100-entry
-    // default (round-11, guide §1.2/§4): one registered query compiles
-    // ~10-40 whole-stage/expression fragments, so a 379-query sweep holds
-    // thousands of distinct fragments while the default static cache keeps
-    // 100 — by the time a pass returns to a query, its fragments are long
-    // evicted and EVERY timed execution re-runs Janino over the whole plan.
-    // Measured (tools/MiniSweep, 8 heavy queries interleaved, gc mode,
-    // min-of-two, at maxEntries=5000): 43.06 -> 31.44 s total, all 8
-    // queries faster; 10000 is that measured value with 2x headroom (the
-    // A/B itself ran at 5000 — round-12 note per ADVICE). The
-    // sweep-vs-solo gap this explains was ~2x on plan-heavy queries
-    // (q333 5.05 s in the 379-query bench vs 2.25 s solo steady state).
-    // Not a local[32] artifact: any long-lived session serving many
-    // distinct queries (the 100 TB service shape) pays the same recompile
-    // tax; results are unchanged — this caches COMPILED CLASSES, never
-    // data. Static conf, so it must sit on the first session's builder.
-    val codegenCacheEntries = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000")
-    val builder = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (submitted) builder else builder.master(s"local[$cpus]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SIZING: sf0.1 ≈ 100 MB ⇒ ~8 shuffle partitions of ~10 MB each.
+    val spark = GraftSession.get(
+      localCores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8").toInt)
     // untimed warmup at the smallest SF: JIT-compiles the shared operator
     // paths (codegen, parquet reader, shuffle) so the timed runs below
-    // measure steady-state query cost, not first-touch compilation.
-    // Per-query state hygiene, applied OUTSIDE the timed window: queries
-    // that persist/localCheckpoint intermediates (CC rounds, ANN indexes,
-    // signature tables) would otherwise accumulate pinned blocks across
-    // 93 × 3 executions and the later heavy queries would pay eviction +
-    // recompute for their predecessors' leftovers — measured as 4-25×
-    // bimodal swings (q58 4s↔43s, q85 15s↔102s) purely from run order.
-    def dropQueryState(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
-      // Round-11 hygiene extension, same contract ("each query pays for its
-      // own state only"), still OUTSIDE the timed window: Spark's
-      // ContextCleaner frees dropped shuffle files, broadcast blocks and
-      // accumulator state only after the DRIVER's GC collects the weak
-      // references — and spark.cleaner.periodicGC.interval defaults to
-      // 30 min, longer than the whole sweep, so with 379 queries × 3
-      // executions the backlog (and the eventual old-gen GC pauses it
-      // forces) lands inside LATER queries' timed windows. Measured
-      // (tools/MiniSweep, 45 heavy queries, gc vs nogc interleaved):
-      // 139.7 → 134.0 s min-sums, every top-20 query faster, no losers.
-      System.gc()
-    }
+    // measure steady-state query cost, not first-touch compilation. Every
+    // run below is followed by GraftSession.dropQueryState, outside the
+    // timed window: each query pays for its own state only.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
       SparkEntry.queries.foreach { case (_, fn) =>
         try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }
-        dropQueryState()
+        GraftSession.dropQueryState(spark)
       }
     }
     // two timed passes, min per query: single-run numbers on a shared
@@ -96,22 +39,31 @@ object Bench {
         (cols.lift(7).getOrElse(0L), cols.sum)
       } catch { case _: Throwable => (0L, 1L) }
     }
-    def timedPass(): Map[String, (Double, Boolean, Double)] =
+    // A failure keeps its cause, `Class: message` (toString — getMessage
+    // alone can be null), for the diagnostics line below.
+    def timedPass(): Map[String, (Double, Option[String], Double)] =
       SparkEntry.queries.map { case (name, fn) =>
         val (s0, j0) = stealTotal()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        val err =
+          try { fn(spark, sfDir).count(); None } catch { case e: Throwable => Some(e.toString) }
         val dt = (System.nanoTime() - t0) / 1e9
         val (s1, j1) = stealTotal()
         val stealPct = 100.0 * (s1 - s0) / math.max(1L, j1 - j0)
-        dropQueryState() // untimed: each query pays for its own state only
-        name -> (dt, ok, stealPct)
+        GraftSession.dropQueryState(spark)
+        name -> (dt, err, stealPct)
       }
     val (p1, p2) = (timedPass(), timedPass())
-    val results = p1.map { case (k, (v1, ok1, _)) =>
-      val (v2, ok2, _) = p2(k)
-      k -> (if (ok1 && ok2) math.min(v1, v2) else -1.0)
+    val results = p1.map { case (k, (v1, err1, _)) =>
+      val (v2, err2, _) = p2(k)
+      k -> (if (err1.isEmpty && err2.isEmpty) math.min(v1, v2) else -1.0)
     }
+    // first pass's cause wins; a query that failed only in pass 2 reports
+    // that one. Capped: an analysis error can embed a whole plan.
+    val errors = p1.toSeq.sortBy(_._1).flatMap { case (k, (_, err1, _)) =>
+      err1.orElse(p2(k)._2).map(e =>
+        BenchCompare.jsonString(k) + ":" + BenchCompare.jsonString(e.take(500)))
+    }.mkString("{", ",", "}")
     // µs rounding (round-12, VERDICT r11 #1): full-precision doubles made
     // the 379-entry line ~19 KB and round 10's line was truncated in the
     // driver's finite tail capture, costing that round its per-query PERF
@@ -167,7 +119,7 @@ object Bench {
             try { SparkEntry.queries(q)(spark, sfDir).count(); true }
             catch { case _: Throwable => false }
           val dt = (System.nanoTime() - t0) / 1e9
-          dropQueryState()
+          GraftSession.dropQueryState(spark)
           if (ok) Some(dt) else None
         }
         if (times.size == 2) Some(times.min) else None
@@ -183,7 +135,8 @@ object Bench {
     // contract line (queries/sf/metric/unit/value, µs-rounded) is printed
     // LAST and mirrored to bench_last.json so the guard's next-round parse
     // survives any stdout truncation.
-    val diagLine = s"""{"bench_diag":{"noise":$noise,"regressions":$guard}}"""
+    val diagLine =
+      s"""{"bench_diag":{"noise":$noise,"regressions":$guard,"errors":$errors}}"""
     val line =
       s"""{"queries":$qs,"sf":"$sfDir","metric":"total","unit":"sec","value":${r6(total)}}"""
     println(diagLine)

@@ -89,4 +89,20 @@ object BenchCompare {
       s"""{"query":"$q","prev":${r3(p)},"cur":${r3(c)},"factor":${r3(c / p)},$soloPart}"""
     }.mkString("[", ",", "]")
   }
+
+  /** A JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20) — a tab or CR in builder-authored SQL or an exception message
+    * would otherwise make the file unparseable for `json.load` (the oracle
+    * check, bench readers) and silently zero a round's correctness or
+    * diagnostics.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -1,52 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Solo steady-state timer for one registered query — the adjudication tool
-  * the bench guard's in-sweep numbers get checked against. A guard-tripped
-  * query's sweep time carries its neighbors' cache pressure and scheduler
-  * noise; this main runs exactly one query, warm, N times, and prints the
-  * min — the figure that separates "the plan moved" from "the machine
-  * moved". Usage: `runMain graft.QueryTimer <queryName> [reps=3]` with
-  * `SPARK_GRAFT_SF_DIR` selecting the data.
+/** Steady-state timer for one or more registered queries — the figure
+  * Bench's in-sweep numbers get checked against, and the A/B harness for a
+  * handful of queries without the 379-query sweep.
+  *
+  * Each query is warmed once at sf0.001 (JIT, codegen; the `sf0.001` dir
+  * beside the target SF dir) and once at the target SF (staged layouts,
+  * footer cache). Then 3 reps run ROUND-ROBIN across the queries, so
+  * ambient drift spreads over all of them instead of landing on whichever
+  * ran last, with [[GraftSession.dropQueryState]] after every run. One JSON line per query: its times, min and spread
+  * ((max − min) / min, the harness's own variance floor).
+  *
+  * Usage: `runMain graft.QueryTimer <query> [query ...]`, with
+  * `SPARK_GRAFT_SF_DIR` selecting the data (default sf0.1).
   */
 object QueryTimer {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: QueryTimer <queryName> [reps]")
-    val name = args(0)
-    val reps = if (args.length > 1) args(1).toInt else 3
+    require(args.nonEmpty, "usage: QueryTimer <query> [query ...]")
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries.getOrElse(
-      name, sys.error(s"unknown query: $name"))
-    def dropState(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
-    }
-    // one untimed warmup at the target SF (JIT + parquet footer cache)
-    fn(spark, sfDir).count()
-    dropState()
-    val times = (1 to reps).map { _ =>
+    val spark = GraftSession.get(
+      localCores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8").toInt)
+    def run(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
+      SparkEntry.queries(name)(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      dropState()
+      GraftSession.dropQueryState(spark)
       dt
     }
-    println(f"""{"query":"$name","sf":"$sfDir","reps":$reps,"times":[${times.map(t => f"$t%.3f").mkString(",")}],"min":${times.min}%.3f}""")
+    // sf0.001 lives beside the target SF dir; its warmup is skipped when absent
+    val warmDir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toFile
+    for (name <- args) {
+      if (warmDir.isDirectory) run(name, warmDir.toString)
+      run(name, sfDir)
+    }
+    val reps = Seq.fill(3)(args.toSeq.map(name => name -> run(name, sfDir)))
+    for (name <- args) {
+      val times = reps.map(_.toMap.apply(name))
+      val spread = 100.0 * (times.max - times.min) / math.max(1e-9, times.min)
+      println(f"""{"query":"$name","sf":"$sfDir","times":[${times.map(t => f"$t%.3f").mkString(",")}],""" +
+        f""""min":${times.min}%.3f,"spread_pct":$spread%.1f}""")
+    }
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,34 +8,19 @@ object Verify {
     // dump to those queries (local iteration); the driver passes exactly two
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    // honor a submitted master (spark-submit / -Dspark.master); local
-    // fallback only when running outside a harness — same policy as Bench
-    val submitted = new org.apache.spark.SparkConf().contains("spark.master")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      // same workload-sized generated-class cache as Bench (static conf;
-      // see Bench.scala) — the dump sweeps the same 379 plans and pays the
-      // same per-query Janino recompile tax under the 100-entry default
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 here, DELIBERATELY diverging from the library default
-      // (Schemas.session writes INT64 micros — the statistics-bearing form
-      // the skipping manifest needs): this dump is not a data sink, it is
-      // the comparator surface the driver hashes against DuckDB, and INT64
-      // timestamps carry isAdjustedToUTC=true which DuckDB surfaces as
-      // TIMESTAMPTZ ('+00:00') while the oracle SQL yields naive TIMESTAMP
-      // — 9 timestamp-shaped queries hash-red on representation alone
-      // (measured via scripts/oracle_check.py, round 9). INT96 reproduces
-      // the exact dump bytes every green round has gated on.
-      .config("spark.sql.parquet.outputTimestampType", "INT96")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark =
-      (if (submitted) builder else builder.master(s"local[$cpus]")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(
+      localCores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8").toInt)
+    // INT96 here, DELIBERATELY diverging from the library default
+    // (GraftSession writes INT64 micros — the statistics-bearing form
+    // the skipping manifest needs): this dump is not a data sink, it is
+    // the comparator surface hashed against DuckDB, and INT64
+    // timestamps carry isAdjustedToUTC=true which DuckDB surfaces as
+    // TIMESTAMPTZ ('+00:00') while the oracle SQL yields naive TIMESTAMP
+    // — 9 timestamp-shaped queries hash-red on representation alone
+    // (measured via scripts/oracle_check.py, round 9). INT96 reproduces
+    // the exact dump bytes every green round has gated on.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -44,30 +28,15 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // toString, not getMessage: the class names the failure, and the
+        // message alone can be null
+        System.err.println(s"[verify] $name failed: $e")
       }
-      // same per-query state hygiene as Bench: queries that persist or
-      // localCheckpoint intermediates would otherwise accumulate pinned
-      // blocks across the whole 96-query dump
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
+      GraftSession.dropQueryState(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${BenchCompare.jsonString(k)}: ${BenchCompare.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Fixed schemas for the entregas pipeline.
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types._
   * ANSI note: Spark 4 defaults `spark.sql.ansi.enabled=true`; the reference ran
   * pre-ANSI semantics where failed casts/parses yield NULL (load-bearing: an
   * unparseable `fecha_proceso` becomes NULL and is silently dropped by the
-  * date-range filter, `:484,496-499`). We pin ANSI off in [[session]] so the
+  * date-range filter, `:484,496-499`). We pin ANSI off in [[graft.GraftSession.get]] so the
   * whole pipeline — including `to_date` and double→decimal casts — keeps
   * NULL-on-failure semantics without sprinkling `try_*` variants everywhere.
   */
@@ -86,27 +85,4 @@ object Schemas {
     silverSchema.fields.map(f => StructField(f.name, StringType)) :+
       StructField("motivo_obs", StringType)
   )
-
-  /** Session factory with the pipeline's required semantics pinned. */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // INT96 (the legacy default) is deprecated, bigger on disk, and —
-      // decisive at 100 TB — carries NO usable min/max statistics, so
-      // neither parquet row-group pruning nor the file-level skipping
-      // manifest (graft.etl.Skipping) can prune on a timestamp written
-      // that way. INT64 micros is what the modern lakehouse writes.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -24,23 +24,6 @@ object Dedup {
   private def bcastLabelBound: Long =
     graft.util.HeapBounds.broadcastRowBound("graft.graph.bcastRows")
 
-  /** Min-propagation steps chained per materialized round once CC's
-    * broadcast regime engages. MEASURED NEGATIVE at depth 2/3/4 (round-12,
-    * q332 solo min-of-3: 3.37 / 3.49 / 3.44 / 3.74 s for 1/2/3/4): the
-    * path-halving shortcut fires once per BLOCK, so a k-step block does
-    * k-1 fewer compressions and the block count barely drops (q332 trace:
-    * 15 blocks at k=1 → 12 at k=2) while per-block analysis/broadcast
-    * cost grows — default stays 1. The chained path is kept correct and
-    * test-covered (OpsSpec high-diameter case sets the property) because
-    * the fixpoint is k-invariant: extra steps past convergence are the
-    * identity. Property override for A/B tooling only.
-    */
-  private[graft] def ccBcastChain: Int =
-    sys.props.get("graft.cc.bcastChain")
-      .orElse(sys.env.get("GRAFT_CC_CHAIN")).map(_.toInt)
-      .filter(c => c >= 1 && c <= 4)
-      .getOrElse(1)
-
   /** Exact duplicate grouping on arbitrary key expressions: survivor =
     * min(idCol) per group (deterministic), plus group size.
     */
@@ -694,31 +677,17 @@ object Dedup {
     // ContextCleaner happens to GC the dropped DataFrame — on a large driver
     // heap that can be never, and N rounds of corpus-sized label tables
     // accumulate in the block manager (measured: repeated cascade runs in
-    // one session degraded 10× from exactly this). Track the RDD ids each
-    // checkpoint adds and free the PREVIOUS round eagerly once the next
-    // round is materialized; only the returned round stays pinned (its
-    // blocks ARE the result — a localCheckpoint cannot be recomputed).
-    val sc = nodes.sparkSession.sparkContext
-    def ckpt(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(true)
-      val created = sc.getPersistentRDDs.keySet.toSet -- before
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"CC-TRACE ckpt created=$created")
-      (out, created)
-    }
-    def free(ids: Set[Int]): Unit = {
-      if (sys.env.contains("GRAFT_CC_TRACE"))
-        System.err.println(s"CC-TRACE free $ids")
-      sc.getPersistentRDDs.filter(kv => ids.contains(kv._1)).values
-        .foreach(_.unpersist(blocking = false))
-    }
-    var (labels, labelIds) = ckpt(Par.spread(
+    // one session degraded 10× from exactly this). The label chain frees
+    // the PREVIOUS round eagerly once the next round is materialized; only
+    // the returned round stays pinned (its blocks ARE the result — a
+    // localCheckpoint cannot be recomputed).
+    val labelChain = new Graph.RoundChain(sess.sparkContext)
+    val symBChain = new Graph.RoundChain(sess.sparkContext)
+    var labels = labelChain.ckpt(Par.spread(
       nodes.select(col(idName).as("id"), col(idName).as("component")), col("id")))
     sess.conf.set(shuffleKey, roundParts.toString)
     if (smallGraph) sess.conf.set(aqeKey, "false")
     var symB: DataFrame = null
-    var symBIds: Set[Int] = Set.empty
     try {
       val compType = labels.schema("component").dataType
       var converged = false
@@ -735,24 +704,12 @@ object Dedup {
       // label (dst = src picks it) — no Union, no label-table exchange.
       // (Shipping this form UNCONDITIONALLY measured ~0.3 s SLOWER on the
       // clique-shaped gates — §8.8#11a; the lazy switch keeps them intact.)
-      // CHAINED bcast rounds (round-12): QueryLedger showed the
-      // high-diameter loop's cost is per-MATERIALIZED-round driver fixed
-      // work, not data (q332: 2.77 s of 5.02 s outside any job across 79
-      // jobs; the stack profile attributes it to Catalyst analysis ~20%,
-      // codegen lookup ~11%, QueryExecution machinery ~15%). Each bcast
-      // step is one BHJ + one narrow aggregate, so — the coreness
-      // stepsPerCheckpoint device — chain GRAFT_CC_CHAIN (default 2)
-      // steps per checkpoint: the inner step broadcasts an unmaterialized
-      // aggregate (each BroadcastExchange materializes exactly once,
-      // nesting linearly) and `prev` threads the BLOCK-INPUT label through
-      // every step, so the observe()-fused changed-count still compares
-      // block output against block input. Labels are monotone
-      // non-increasing under every step (the self-loop keeps a node's own
-      // label in its min), so changed==0 across a block certifies every
-      // step inside it was the identity — the same invariance the
-      // single-step form used. An id ENTERING inside a block keeps a NULL
-      // prev through the block's self-loops and counts as changed, exactly
-      // like the single-step form.
+      // One broadcast step per materialized round: chaining k steps per
+      // checkpoint (the coreness stepsPerCheckpoint device) measured SLOWER
+      // at k=2/3/4 (round-12, q332 solo min-of-3: 3.37 / 3.49 / 3.44 /
+      // 3.74 s for k=1..4) — path-halving fires once per checkpoint, so
+      // longer blocks barely cut the block count (15 → 12 at k=2) while
+      // per-block analysis and broadcast cost grows.
       def ensureSymB(): Unit =
         if (symB == null) {
           // self-loops over labels ∪ ALL endpoints: an id can still ENTER
@@ -766,35 +723,24 @@ object Dedup {
             .select(col("id").as("src"), col("id").as("dst"))
           val raw = sym.select(col("src"), col("dst")).unionAll(loops)
             .transform(Par.spread(_, col("src")))
-          // LOCAL CHECKPOINT, not persist() (round-12): the chained bcast
-          // rounds reference symB both directly AND inside a nested
-          // broadcast subquery; analysis re-ids the second occurrence
-          // (self-join deduplication), the CacheManager then fails to
-          // substitute the cached relation for that clone, and the clone
-          // replans against symB's RAW lineage — which reads the
-          // switch-round label checkpoint that free() drops two blocks
-          // later (measured: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the
-          // block after the switch). A LogicalRDD has no lineage to
-          // replan: every clone reads the same materialized blocks. AQE
-          // scoped off around the build so the src partitioning stays
-          // visible to every later round (the ckptKeepPartitioning
-          // device); blocks are freed with symBIds in the finally.
-          val aqePrev = sess.conf.get(aqeKey)
-          sess.conf.set(aqeKey, "false")
-          try {
-            val (out, ids) = ckpt(raw)
-            symB = out
-            symBIds = ids
-          } finally sess.conf.set(aqeKey, aqePrev)
+          // LOCAL CHECKPOINT, not persist(): symB's raw lineage reads
+          // the switch-round label checkpoint, which the label chain frees
+          // once this round is checkpointed. A persisted symB whose cache
+          // ever misses (an evicted block, or a plan clone the
+          // CacheManager does not match) would replan against those freed
+          // blocks and fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; a
+          // LogicalRDD has no lineage to replan. Partition-preserving, so
+          // the src partitioning stays visible to every later round; freed
+          // in the finally.
+          symB = Graph.ckptKeepPartitioning(symBChain, raw)
         }
-      def bcastStepFrom(input: DataFrame, firstStep: Boolean): DataFrame = {
+      def bcastStep(): DataFrame = {
         ensureSymB()
-        val l = broadcast(input)
+        val l = broadcast(labels)
         symB.join(l, symB("dst") === l("id"))
           .groupBy(symB("src").as("id"))
           .agg(min(col("component")).as("component"),
-            max(when(col("dst") === col("src"),
-              if (firstStep) col("component") else col("prev"))).as("prev"))
+            max(when(col("dst") === col("src"), col("component"))).as("prev"))
       }
       // broadcast-bound probe, decided ONCE: the r7 form re-ran
       // `labels.count()` as an extra Spark action every round ≥5 until the
@@ -810,7 +756,6 @@ object Dedup {
       // actions; -1 until the first round lands
       var lastLabelCount = -1L
       while (!converged && it < maxIters) {
-        val roundT0 = System.nanoTime()
         // carry the previous label through the aggregation (max over one
         // non-null + nulls) so convergence is a cheap scan of the
         // checkpointed round instead of an extra join+shuffle per round
@@ -835,13 +780,7 @@ object Dedup {
           }
           bcastOk
         })
-        val stepsThisBlock =
-          if (useBcast) Dedup.ccBcastChain else 1
-        val agg =
-          if (useBcast)
-            (2 to stepsThisBlock).foldLeft(bcastStepFrom(labels, firstStep = true))(
-              (d, _) => bcastStepFrom(d, firstStep = false))
-          else unionStep()
+        val agg = if (useBcast) bcastStep() else unionStep()
         // PATH-HALVING from round 3 on, FUSED into the round plan:
         // component := prevLabel(component) — the Shiloach–Vishkin shortcut
         // that turns diameter-bound convergence into log-diameter. Near-dup
@@ -895,24 +834,15 @@ object Dedup {
         // min-neighbor fixpoint: at the fixpoint the shortcut is the
         // identity (every component value is a root labeling itself).
         val obs = org.apache.spark.sql.Observation(s"graft_cc_round_$it")
-        val (next, nextIds) = ckpt(halved.observe(
+        // the chain frees the previous round: fully consumed by this checkpoint
+        labels = labelChain.ckpt(halved.observe(
           obs,
           count(when(!(col("component") <=> col("prev")), lit(1))).as("changed"),
-          count(lit(1)).as("cnt")))
+          count(lit(1)).as("cnt"))).select(col("id"), col("component"))
         val changed = obs.get("changed").asInstanceOf[Long]
         lastLabelCount = obs.get("cnt").asInstanceOf[Long]
-        if (sys.env.contains("GRAFT_CC_TRACE")) {
-          System.err.println(f"CC-TRACE it=$it changed=$changed bcast=$useBcast " +
-            f"wall=${(System.nanoTime() - roundT0) / 1e9}%.3f")
-          if (useBcast && sys.env.contains("GRAFT_CC_TRACE_PLAN"))
-            System.err.println("CC-TRACE plan:\n" +
-              halved.queryExecution.executedPlan.treeString)
-        }
-        free(labelIds) // previous round: fully consumed by `next`'s checkpoint
-        labels = next.select(col("id"), col("component"))
-        labelIds = nextIds
         converged = changed == 0
-        it += stepsThisBlock
+        it += 1
       }
       if (!converged)
         throw new IllegalStateException(
@@ -920,12 +850,13 @@ object Dedup {
             "graph has a component with diameter > maxIters; raise maxIters " +
             "(or use a doubling scheme) rather than consuming a mid-chain labeling")
       RoundTrace.record("cc", it)
+      labelChain.keep() // the returned round's blocks ARE the result
       labels.select(col("id").as(idName), col("component"))
     } finally {
       sess.conf.set(shuffleKey, prevShuffle)
       sess.conf.set(aqeKey, prevAqe)
       sym.unpersist()
-      free(symBIds) // symB is a local checkpoint; its blocks ARE the frame
+      symBChain.free() // symB is a local checkpoint; its blocks ARE the frame
       ()
     }
   }

@@ -518,8 +518,9 @@ object Graph {
           struct(col("u2").as("u"), col("v2").as("v")),
           struct(col("u3").as("u"), col("v3").as("v")))).as("e"))
         .select(col("e.u").as("u"), col("e.v").as("v"))
-      // Round-9 measured (KTrussLab): the triangle list is UNPARTITIONED
-      // w.r.t. edge keys, so each partial-agg task's hash table is keyed by
+      // Round-9 measured (SURVEY.md §8.10 #8, commit 5a837d0): the
+      // triangle list is UNPARTITIONED w.r.t. edge keys, so each
+      // partial-agg task's hash table is keyed by
       // nearly the FULL surviving edge set — at the 100× rung that stage's
       // CPU grew 26× for 3.33× data (bytes exactly linear): the per-task
       // table (~24M keys × 32 tasks) left every probe missing LLC. Past a

@@ -732,9 +732,10 @@ object StreamOps {
     * In the broadcast regime a SMALL-HEAP-ONLY coalesce bounds concurrent
     * sorter-page pressure (32 tasks × 32 MB sort pages OOM'd a default 1g
     * heap once under RocksDB's pinned JNI criticals); on a ≥4 GiB heap it
-    * is skipped — Q309Lab measured the 8-task pinch costing 70 GB of
-    * distinct-sort spill at the 100× rung. Both join sides descend from
-    * the same memory-table view, so qualified aliases stay ambiguous
+    * is skipped — the 8-task pinch measured 70 GB of distinct-sort spill
+    * at the 100× rung (SURVEY.md §8.10 #7, commit 5a837d0). Both join
+    * sides descend from the same memory-table view, so qualified aliases
+    * stay ambiguous
     * (identical attribute ids) — hence the toDF rename.
     */
   def expandBucketPairs(index: DataFrame): DataFrame =
@@ -789,7 +790,7 @@ object StreamOps {
     // 1g heap under RocksDB's pinned JNI criticals) — so gate it on the
     // heap instead of applying it always: at the 100× rung the 8-task
     // pinch made each task distinct-sort ~700 MB of raw pairs and spill
-    // 70 GB (Q309Lab job table); on a ≥4 GiB heap the natural 32-way
+    // 70 GB (SURVEY.md §8.10 #7); on a ≥4 GiB heap the natural 32-way
     // collapse partitioning spreads the same sort 4× wider, spill-free.
     val m =
       if (!broadcastRegime) mBase

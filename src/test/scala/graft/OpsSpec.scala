@@ -358,38 +358,30 @@ class OpsSpec extends SparkTestBase {
     assert(got2 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
-  test("connected components: high-diameter path exercises the chained broadcast regime") {
+  test("connected components: high-diameter path exercises the broadcast regime") {
     import spark.implicits._
-    // chain=2 covers the k>1 block path (shipped default is 1 — measured
-    // negative, see Dedup.ccBcastChain) AND pins the symB local-checkpoint
-    // fix: the nested-broadcast clone of symB must never replan against
-    // freed label checkpoints (regression: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-    // on the block after the broadcast switch when symB was persist()-cached)
-    sys.props("graft.cc.bcastChain") = "2"
-    try {
-      // diameter 63 — far past the round-5 broadcast switch, so the chained
-      // bcast rounds and the path-halving shortcut both engage; the fixpoint
-      // labeling must still be the min id per component
-      val n = 64L
-      val nodes = (0L until n).toDF("id")
-      val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      val got = Dedup.connectedComponents(nodes, edges, maxIters = 40)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == (0L until n).map(_ -> 0L).toMap,
-        "high-diameter path must label every node with the min id")
+    // diameter 63 — far past the round-5 broadcast switch, so the broadcast
+    // rounds and the path-halving shortcut both engage; the fixpoint
+    // labeling must still be the min id per component
+    val n = 64L
+    val nodes = (0L until n).toDF("id")
+    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val got = Dedup.connectedComponents(nodes, edges, maxIters = 40)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (0L until n).map(_ -> 0L).toMap,
+      "high-diameter path must label every node with the min id")
 
-      // ids ENTERING the labeling inside a chained block (edge endpoints
-      // absent from `nodes`, reachable only late in the propagation): their
-      // NULL prev must keep the loop alive until their labels settle
-      val tail = Seq((n - 1, 1000L), (1000L, 1001L), (1001L, 1002L))
-      val got2 = Dedup.connectedComponents(
-        (0L until n).toDF("id"),
-        ((0L until n - 1).map(i => (i, i + 1)) ++ tail).toDF("id_a", "id_b"),
-        maxIters = 60)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got2(1002L) == 0L && got2(1000L) == 0L,
-        "entrant chain must transit the component label to its end")
-    } finally { sys.props -= "graft.cc.bcastChain"; () }
+    // ids ENTERING the labeling after the broadcast switch (edge endpoints
+    // absent from `nodes`, reachable only late in the propagation): their
+    // NULL prev must keep the loop alive until their labels settle
+    val tail = Seq((n - 1, 1000L), (1000L, 1001L), (1001L, 1002L))
+    val got2 = Dedup.connectedComponents(
+      (0L until n).toDF("id"),
+      ((0L until n - 1).map(i => (i, i + 1)) ++ tail).toDF("id_a", "id_b"),
+      maxIters = 60)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got2(1002L) == 0L && got2(1000L) == 0L,
+      "entrant chain must transit the component label to its end")
   }
 
   test("connected components match a local union-find on random graphs") {

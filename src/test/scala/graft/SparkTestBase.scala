@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sequentially under sbt's forked test JVM).
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = graft.etl.Schemas.session("local[4]", 4)
+  lazy val spark: SparkSession = GraftSession.get(localCores = 4, shufflePartitions = 4)
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

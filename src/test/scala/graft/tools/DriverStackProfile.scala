@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Round-12 driver-gap attribution (guide §7.3, applied in-process): the
   * QueryLedger showed iterative queries spend ~half their wall OUTSIDE any
@@ -19,22 +19,8 @@ object DriverStackProfile {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q332_grid_dbscan")
     val reps = args.lift(1).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // match Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def drop(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
-      System.gc()
-    }
+    val spark = GraftSession.get(localCores = 32, shufflePartitions = 8)
+    def drop(): Unit = GraftSession.dropQueryState(spark)
     val fn = graft.SparkEntry.queries(name)
     fn(spark, "/root/testdata/sf0.001").count() // JIT warm
     drop()

@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Round-12 per-query floor attribution (VERDICT r11 next-round #6): the
   * 245 sub-0.5 s queries sum to ~55 s at sf0.1 and the open question is
@@ -20,15 +21,7 @@ import org.apache.spark.sql.SparkSession
   */
 object FloorLedger {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // match Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(localCores = 32, shufflePartitions = 8)
 
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val jobWall = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -45,14 +38,6 @@ object FloorLedger {
         }
     })
 
-    def drop(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
-      System.gc()
-    }
-
     val dir = "/root/testdata/sf0.1"
     // default scope: every registered query; a numeric arg keeps only
     // queries whose steady pass lands under that many seconds (the floor
@@ -63,9 +48,9 @@ object FloorLedger {
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {
         fn(spark, "/root/testdata/sf0.001").count() // JIT/codegen warm
-        drop()
+        GraftSession.dropQueryState(spark)
         fn(spark, dir).count() // layout warm
-        drop()
+        GraftSession.dropQueryState(spark)
         jobWall.set(0L); jobCount.set(0); jobStarts.clear()
         val t0 = System.nanoTime()
         fn(spark, dir).count()
@@ -76,10 +61,10 @@ object FloorLedger {
           sumWall += wall; sumJobs += jw; n += 1
           println(f"$name | $wall%.3f | $jw%.3f | ${wall - jw}%.3f | ${jobCount.get}")
         }
-        drop()
+        GraftSession.dropQueryState(spark)
       } catch { case e: Throwable =>
         println(s"$name | FAILED ${e.getClass.getSimpleName}")
-        drop()
+        GraftSession.dropQueryState(spark)
       }
     }
     println(f"TOTAL over $n queries: wall=$sumWall%.1f s job_wall=$sumJobs%.1f s " +

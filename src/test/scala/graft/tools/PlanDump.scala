@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dump `.explain("formatted")` of registered queries to files — the
   * round-11 optimization round's plan evidence (`plans/r11/<q>_<tag>.txt`).
@@ -19,14 +19,7 @@ object PlanDump {
     require(args.length >= 2, "usage: PlanDump <tag> <query> [query ...]")
     val tag = args(0)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // match Bench (round-11)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(localCores = 32, shufflePartitions = 8)
     val outDir = new java.io.File("plans/r11")
     outDir.mkdirs()
     for (name <- names) {
@@ -37,10 +30,7 @@ object PlanDump {
       val f = new java.io.File(outDir, s"${name}_$tag.txt")
       java.nio.file.Files.writeString(f.toPath, txt)
       println(s"[plandump] wrote ${f.getPath} (${txt.length} chars)")
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
+      GraftSession.dropQueryState(spark)
     }
     spark.stop()
   }

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Phase-level timing for q309_stream_neardup's 14.9 s bench cost at sf0.1:
   * (a) streaming bucket-index build (minhash + transformWithState/RocksDB),
@@ -14,15 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Q309Phases {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(localCores = 32, shufflePartitions = 32)
     val dir = "/root/testdata/sf0.1"
 
     def time[T](label: String)(f: => T): T = {
@@ -62,7 +55,7 @@ object Q309Phases {
         println("  verified: " + graft.ops.Dedup
           .verifyCandidatePairs(raw, ws, 0.95, broadcastAttach = false).count())
       }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.dropQueryState(spark)
     }
 
     // RocksDB knob A/B, alternated (same-session streaming runs are noisy)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Per-job/stage attribution for ONE registered query under Bench's exact
   * session settings — the round-11 optimization round's "where does the
@@ -13,29 +13,16 @@ import org.apache.spark.sql.SparkSession
 object QueryLedger {
   def main(args: Array[String]): Unit = {
     val names = if (args.nonEmpty) args.toSeq else Seq("q307_coreness")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // match Bench (round-11)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(localCores = 32, shufflePartitions = 8)
     val ledger = new StageLedger(spark)
-    def drop(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
-    }
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       fn(spark, "/root/testdata/sf0.001").count() // JIT warm
-      drop()
+      GraftSession.dropQueryState(spark)
       // one untimed full-SF pass so layout caches (split dirs, indexes)
       // are built; the ledger pass below then measures steady state
       fn(spark, "/root/testdata/sf0.1").count()
-      drop()
+      GraftSession.dropQueryState(spark)
       ledger.start()
       val t0 = System.nanoTime()
       fn(spark, "/root/testdata/sf0.1").count()
@@ -43,7 +30,7 @@ object QueryLedger {
       ledger.stop()
       println(f"==== $name steady pass: $dt%.2f s ====")
       ledger.print(topStages = 16)
-      drop()
+      GraftSession.dropQueryState(spark)
     }
     spark.stop()
   }

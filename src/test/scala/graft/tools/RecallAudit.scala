@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.ops.Similarity
 
 /** Measurement tool behind the q29/q55/q74 recall gates: per-query hit counts
@@ -16,16 +17,7 @@ import graft.ops.Similarity
   */
 object RecallAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(localCores = 32, shufflePartitions = 8)
     graft.functions.GraftFunctions.register(spark)
 
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Round-12 scale-out probe (VERDICT r11 next-round #3): the r11 bench's
   * 8-core/32-core ratio was ~1.0 across the board because sf0.1 queries are
@@ -50,15 +52,7 @@ object ScaleProbeR12 {
       "q131_link_prediction", "q213_itemsets_3", "q293_ks_statistic",
       "q245_theil_sen", "q247_consistent_hash", "q323_join_size_sketch",
       "q218_rank_correlation")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // match Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(localCores = cpus.toInt, shufflePartitions = shuffle.toInt)
 
     // ---- stage the inflated dir (idempotent across invocations) ----
     val srcStamp = graft.Tables.names.map { t =>
@@ -92,14 +86,6 @@ object ScaleProbeR12 {
       }
       java.nio.file.Files.write(stampFile.toPath, stampVal.getBytes)
     }
-
-    def drop(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
-      System.gc()
-    }
     def stealTotal(): (Long, Long) = {
       try {
         val f = scala.io.Source.fromFile("/proc/stat")
@@ -113,16 +99,16 @@ object ScaleProbeR12 {
       val fn = graft.SparkEntry.queries(name)
       try {
         fn(spark, "/root/testdata/sf0.001").count() // JIT warm
-        drop()
+        GraftSession.dropQueryState(spark)
         fn(spark, probeDir.toString).count() // layout/staging warm at scale
-        drop()
+        GraftSession.dropQueryState(spark)
         val times = (1 to 2).map { _ =>
           val (s0, j0) = stealTotal()
           val t0 = System.nanoTime()
           fn(spark, probeDir.toString).count()
           val dt = (System.nanoTime() - t0) / 1e9
           val (s1, j1) = stealTotal()
-          drop()
+          GraftSession.dropQueryState(spark)
           (dt, 100.0 * (s1 - s0) / math.max(1L, j1 - j0))
         }
         val best = times.minBy(_._1)
@@ -132,7 +118,7 @@ object ScaleProbeR12 {
       } catch { case e: Throwable =>
         println(s"PROBE|$name|cores=$cpus|FAILED|${e.getClass.getSimpleName}: " +
           String.valueOf(e.getMessage).take(140))
-        drop()
+        GraftSession.dropQueryState(spark)
       }
     }
     spark.stop()

@@ -5,8 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-/** Shared per-job / per-stage attribution listener for the round-9 labs
-  * (KTrussLab, Q309Lab). Observe-fused loops run ONE action per round, so
+/** Per-job / per-stage attribution listener behind [[QueryLedger]] (its
+  * round-9 k-truss and q309 attributions are recorded in SURVEY.md §8.10
+  * #7-#8 and commit 5a837d0). Observe-fused loops run ONE action per round, so
   * per-JOB attribution is per-round attribution; for pipeline queries the
   * job/stage tables name which stage's time or shuffle grew
   * super-proportionally between ladder rungs. Also counts stage ATTEMPTS

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
+
+import graft.GraftSession
 
 /** Round-12 streaming-family attribution (VERDICT r11 next-round #1): a
   * StreamingQueryListener that captures EVERY microbatch's
@@ -25,15 +26,7 @@ object StreamBatchLedger {
       "q353_restart_recovery", "q273_stream_join", "q304_tws_timers",
       "q305_tws_firstk", "q300_stream_outer_join", "q313_stream_full_outer_join",
       "q368_available_now", "q77_stream_hourly")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // match Bench
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get(localCores = 32, shufflePartitions = 8)
 
     // progress events arrive on the async listener bus; processAllAvailable
     // + stop() inside the gates does not drain it, so collect into a
@@ -48,21 +41,13 @@ object StreamBatchLedger {
       }
     })
 
-    def drop(): Unit = {
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
-      System.gc()
-    }
-
     val dir = "/root/testdata/sf0.1"
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       fn(spark, "/root/testdata/sf0.001").count() // JIT warm
-      drop()
+      GraftSession.dropQueryState(spark)
       fn(spark, dir).count() // layout/staging warm
-      drop()
+      GraftSession.dropQueryState(spark)
       progress.clear()
       val t0 = System.nanoTime()
       fn(spark, dir).count()
@@ -103,7 +88,7 @@ object StreamBatchLedger {
         f"outside-stream=${wall - trig / 1e3}%.2f s | state commitTimeMs(sum)=${commit / 1e3}%.2f s")
       println("  state custom metrics (sums over all batches/operators): " +
         custTot.take(16).map { case (k, v) => s"$k=$v" }.mkString(" "))
-      drop()
+      GraftSession.dropQueryState(spark)
     }
     spark.stop()
   }
